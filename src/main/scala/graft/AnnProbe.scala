@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The IVFPQ OPERATING-CURVE probe (round 16, VERDICT r15 #4): recall@10
@@ -27,17 +27,9 @@ import org.apache.spark.sql.functions._
 object AnnProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_ANN_DIR", "/tmp/sf10e")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_ANN_QUERIES", "100").toInt
     val nlist = sys.env.getOrElse("SPARK_GRAFT_ANN_NLIST", "64").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev main: print the executed plan and one timed noop-sink run of a
   * single SparkEntry query against an arbitrary fixture dir, with
   * optional session-conf overrides — the tool behind planner-decides
@@ -18,12 +16,8 @@ object ExplainQuery {
     val confs = args.drop(2).map { kv =>
       val Array(k, v) = kv.split("=", 2); (k, v)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cores = GraftSession.localCores
+    val b = GraftSession.builder(s"local[$cores]", cores)
       .config("spark.ui.enabled", "false")
     confs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()

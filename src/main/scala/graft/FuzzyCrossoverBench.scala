@@ -1,7 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev measurement main for the fuzzy-dedup band-population guard: the
@@ -36,16 +36,7 @@ object FuzzyCrossoverBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val repsList = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 3, 6)
     val maxDist = 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
 

@@ -37,8 +37,20 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    builder(s"local[$cores]", cores)
+  /** Local-mode task slots: `SPARK_GRAFT_CPUS` when set, else the
+    * machine's core count. The one place every main reads it.
+    */
+  def localCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session every main and the test suite run on: `builder` on
+    * `local[cores]`, UI off, WARN logging.
+    */
+  def local(cores: Int = localCores): SparkSession = {
+    val spark = builder(s"local[$cores]", cores)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The COMPOSED training-data pipeline, measured end-to-end: extract →
@@ -31,17 +31,9 @@ import org.apache.spark.sql.functions._
 object PipelineBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val exportDir = sys.env.getOrElse("SPARK_GRAFT_PIPE_EXPORT",
       "/tmp/graft_pipe_export")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // Per-stage attribution counters (round 15 — the d1000 pack/export
     // runs varied 5-18× run-to-run under the 8 GiB heap with the route

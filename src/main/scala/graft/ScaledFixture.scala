@@ -1,7 +1,7 @@
 package graft
 
 import graft.text.TextFunctions.tokens
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev main: derive a `reps`×-scaled copy of a driver fixture dir, for
@@ -82,15 +82,7 @@ object ScaledFixture {
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(2).getOrElse("/tmp/sf0.3")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def rep(df: DataFrame)(remap: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until reps).map(r => if (r == 0) df else remap(df, r))
@@ -136,8 +128,8 @@ object ScaledFixture {
     // simhash stays within hamming ≤ 3 of the template's (one token of
     // ~120 flips few majority votes) — i.e. ONE ultra-hot tight LSH
     // bucket of N members, the enumeration regime the adaptive dispatch's
-    // closed branch exists for (graft.DedupProbe's template leg,
-    // BASELINE.md round 16). The template body is a fixed ~120-token
+    // closed branch exists for (BASELINE.md "Round-16 measurement: the
+    // adaptive per-bucket dispatch"). The template body is a fixed ~120-token
     // natural-vocabulary paragraph so bucket membership is driven by the
     // shared body, not by a degenerate vocabulary.
     val templates = args.lift(5)

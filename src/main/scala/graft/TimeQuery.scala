@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev measurement main: time a subset of SparkEntry.queries by name
   * without paying for the full bench sweep. Each named query runs one
@@ -13,20 +12,12 @@ object TimeQuery {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = args.collectFirst {
       case a if a.startsWith("--rounds=") => a.stripPrefix("--rounds=").toInt
     }.getOrElse(3)
     val names = args.filterNot(_.startsWith("--"))
     require(names.nonEmpty, "usage: TimeQuery <query name>... [--rounds=N]")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

@@ -426,7 +426,7 @@ object Components {
     // narrow session (rebinding to the caller would re-plan under its
     // AQE confs) — the caller's composition and final action execute
     // narrow. Worth it here: the wedge plan is 6 exchanges = 13 AQE
-    // stage jobs over the oriented edge stream (TrianglesDecomp r19:
+    // stage jobs over the oriented edge stream (OPTIMIZATION_r19.md §4:
     // ~1.0 s of the query's ~2.8 s at sf0.1), all id-keyed and
     // partitioning-independent; `numPartitions` should be the measured
     // edge width (GraphMart.EdgeRowsPerPartition rule).

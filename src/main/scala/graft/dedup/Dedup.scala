@@ -1403,10 +1403,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     * the through-b links pass can lose the a−c component link if b is
     * never a bucket min (DedupSpec pins the subset/hamming-agreement/
     * tight-cluster-equality properties; the chain under-merge is
-    * MEASURED, not planted — the survivors_only_* counts in
-    * graft.DedupProbe). Measured
-    * (graft.DedupProbe, BASELINE.md round 15): the miss is strictly
-    * one-sided — cleanCorpusBest over star pairs keeps every doc the
+    * MEASURED, not planted — the survivors_only_* counts in BASELINE.md
+    * "Round-15 measurement: star vs all-pairs near-dup enumeration").
+    * Measured there: the miss is strictly one-sided — cleanCorpusBest over star pairs keeps every doc the
     * all-pairs route keeps plus 0.47% at d100 / 0.90% at d300 — while
     * candidates drop 6.2× / 11.9× and grow ~linearly (3.8× per 3×
     * docs) where all-pairs grows 7.4×. Use [[simhashPairsWide]] when
@@ -1612,7 +1611,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * Default bound 1024: a 1024-member bucket is ~5·10⁵ all-pairs
     * candidates — sub-second map-side verify work — while the 10⁴-copy
     * template cluster the closed route exists for (planted and measured
-    * in graft.DedupProbe's template fixture, BASELINE.md round 16) is
+    * on the template fixture, BASELINE.md "Round-16 measurement: the
+    * adaptive per-bucket dispatch") is
     * 5·10⁷ per bucket and dispatches closed.
     *
     * Dispatch overhead is itself guarded: one bounded histogram ACTION

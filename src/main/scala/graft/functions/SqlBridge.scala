@@ -39,25 +39,4 @@ object GraftSqlBridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
-
-  /** Build a session with the given extensions over an EXISTING
-    * SparkContext. `spark.sql.extensions` is a static conf — builder
-    * getOrCreate can only honor it when it creates the context — so
-    * tests (or embedders handed a live context) need this constructor
-    * path to bind extensions.
-    */
-  def sessionWithExtensions(sc: org.apache.spark.SparkContext,
-                            configure: SparkSessionExtensions => Unit): SparkSession = {
-    val ext = new SparkSessionExtensions
-    configure(ext)
-    // constructor is Scala-private but bytecode-public; go through
-    // reflection (test/embedding plumbing only)
-    val ctor = classOf[classic.SparkSession].getConstructor(
-      classOf[org.apache.spark.SparkContext], classOf[Option[_]],
-      classOf[Option[_]], classOf[SparkSessionExtensions],
-      classOf[scala.collection.immutable.Map[_, _]],
-      classOf[scala.collection.immutable.Map[_, _]])
-    ctor.newInstance(sc, None, None, ext,
-      Map.empty[String, String], Map.empty[String, String])
-  }
 }

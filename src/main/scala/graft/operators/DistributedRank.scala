@@ -97,8 +97,8 @@ object DistributedRank {
     // the group) + 1 — which removes the row_number WINDOW (and its
     // full (__pid, key) re-shuffle: the checkpoint reads back without
     // partitioning info under AQE, so that window re-exchanged the
-    // whole frame on every execution — round 19, RankFamilyDecomp:
-    // the readout was 9 jobs / ~2.5 s, larger than the positioned
+    // whole frame on every execution — OPTIMIZATION_r19.md §2: the
+    // readout was 9 jobs / ~2.5 s, larger than the positioned
     // build itself). The group minimum rides the SAME bounded
     // per-(partition, key) aggregate the offsets already collect.
     // Contract note: the 33-bit index bounds a partition at ~8.6e9

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement main for the KMV mart's OVERLAP payoff — the question
@@ -17,11 +16,13 @@ import org.apache.spark.sql.functions._
   * ALL pairs from kilobyte arrays — cost scales with #groups × k,
   * data-volume-independent.
   *
-  * Same methodology as SketchMartBench: replica r shifts ts by r days
-  * and offsets user_id by r·10⁸ (more days AND more users — per-type
-  * audiences grow ~reps×), inputs materialized to parquet so every path
-  * reads real files, best-of-3 timings, plus an accuracy gate: every
-  * pair's inter_est within max(30%, 60 abs) of the exact intersection.
+  * Same methodology as the HLL sketch-mart bench (BASELINE.md "Round-9
+  * measurement: persisted HLL sketch mart vs raw rescans"): replica r
+  * shifts ts by r days and offsets user_id by r·10⁸ (more days AND more
+  * users — per-type audiences grow ~reps×), inputs materialized to
+  * parquet so every path reads real files, best-of-3 timings, plus an
+  * accuracy gate: every pair's inter_est within max(30%, 60 abs) of the
+  * exact intersection.
   * The bench runs k=1024 (the operator max — still 8 KB/group): with a
   * FIXED hash function each pair's error is one deterministic draw, and
   * at k=256 this fixture actually lands a ~3σ pair (purchase×view at
@@ -41,16 +42,7 @@ object KmvMartBench {
     val repsList = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 5, 10)
     val rounds = 3
     val k = 1024
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     def timed(f: => Unit): Double = {
       var best = Double.MaxValue

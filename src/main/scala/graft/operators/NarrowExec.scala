@@ -8,20 +8,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * greedy selection) submit one Spark job per AQE query stage — 2-5
   * exchanges per round = 2-5 jobs per round — and on the
   * small-rows/many-rounds shape that job orchestration IS the cost
-  * (graft.r19.LoopConfProbe, interleaved A/B: pageRank 55→29 jobs
+  * (OPTIMIZATION_r19.md §1, interleaved A/B: pageRank 55→29 jobs
   * 1.7→1.5 s, hits 68→42 2.9→1.7, betweenness 55→22 2.6→1.5, weighted
-  * LPA 30→15 1.1→0.54). AQE-off alone LOSES (r18 StarLoopProbe: every
-  * non-adaptive exchange then runs at the session's shuffle width); the
-  * win needs both knobs, and the width stays scale-adaptive when
-  * callers derive it from measured input size (GraphMart.edgePartitions
+  * LPA 30→15 1.1→0.54). AQE-off alone LOSES (OPTIMIZATION_r18.md §2:
+  * every non-adaptive exchange then runs at the session's shuffle
+  * width); the win needs both knobs, and the width stays scale-adaptive
+  * when callers derive it from measured input size (GraphMart.edgePartitions
   * — thousands of partitions on a 100-TB graph, 1 on the fixture).
   *
   * What AQE gives up INSIDE a loop: runtime coalescing (replaced by the
   * measured width — the same target its advisory sizing reaches) and
-  * skew-join splitting (the loops' joins are id-keyed; one hot key's
-  * rows land in one partition either way — AQE cannot split a single
-  * key). Results are partitioning-independent by construction; the
-  * oracle hashes pin that.
+  * skew-join splitting. With AQE on, OptimizeSkewedJoin cuts an
+  * oversized join partition — a hub key's rows included — into
+  * map-output slices, each joined against a copy of the other side's
+  * partition; in a narrow loop a hub id's rows all go to one task.
+  * Results are partitioning-independent by construction; the oracle
+  * hashes pin that.
   *
   * Child sessions (the repo's scoped-conf idiom — q_join_runtime_bloom
   * precedent) keep the regime RACE-FREE: nothing mutates the caller's

@@ -511,7 +511,12 @@ object JoinQueries extends QueryPack {
     // a join tree, not a bare aggregate. The fixture has no partsupp, so
     // the supply relation derives once from lineitem (min unit price per
     // (part, supplier) offer, rounded to 2dp BEFORE the min so the winning
-    // cost is the same bit pattern in both engines). The plan to check at
+    // cost is the same value in both engines). The cent rounding runs on
+    // an exact DECIMAL, as in q11: a double quotient sitting on a half
+    // cent (5.55/6 = 0.925) rounds down in one engine and up in the other.
+    // DuckDB's DECIMAL/DECIMAL is a DOUBLE, so both sides pin the quotient
+    // to DECIMAL(18,6) first — a unit price P/(100·q), q ≤ 50, is never
+    // within 1e-6 of a half cent without being on it. The plan to check at
     // 100 TB: the EUROPE cut broadcasts INTO the supply subtree (out-of-
     // region suppliers never reach the aggregation), the part cut
     // semi-filters offers BEFORE the per-part ranking, and the winner is
@@ -533,8 +538,9 @@ object JoinQueries extends QueryPack {
         .join(broadcast(cut.select("p_partkey")),
           col("l_partkey") === col("p_partkey"), "left_semi")
         .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(round(col("l_extendedprice") / col("l_quantity"), 2))
-          .as("min_cost"))
+        .agg(min(round((col("l_extendedprice").cast("decimal(18,2)") /
+            col("l_quantity").cast("decimal(18,2)")).cast("decimal(18,6)"), 2))
+          .cast("double").as("min_cost"))
         .join(eu, col("l_suppkey") === col("s_suppkey"))
       offers
         .withColumn("__rk", rank().over(
@@ -556,12 +562,16 @@ object JoinQueries extends QueryPack {
     // No partsupp in the fixture, so supply cost is the part's retail
     // price, riding the same broadcast join Q9 uses for ps_supplycost:
     // amount = l_extendedprice·(1−l_discount) − p_retailprice·l_quantity/10.
+    // The amount and its sum run in exact DECIMAL (/10 as ·0.1, which
+    // stays DECIMAL in DuckDB too), so a half-cent total rounds the same
+    // in both engines — a double sum can land a hair below it.
     "q_tpch_q9_shape" -> ((s, d) => {
       val red = broadcast(Tables.part(s, d)
         .filter(col("p_name").like("%red%"))
         .select(col("p_partkey"), col("p_retailprice")))
-      val amount = col("l_extendedprice") * (lit(1) - col("l_discount")) -
-        col("p_retailprice") * col("l_quantity") / lit(10)
+      def cents(c: String) = col(c).cast("decimal(12,2)")
+      val amount = cents("l_extendedprice") * (lit(1) - cents("l_discount")) -
+        cents("p_retailprice") * cents("l_quantity") * lit(BigDecimal("0.1"))
       Tables.lineitem(s, d)
         .join(red, col("l_partkey") === col("p_partkey"))
         .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate")),
@@ -572,7 +582,7 @@ object JoinQueries extends QueryPack {
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name").as("nation"),
           year(col("o_orderdate")).cast("int").as("o_year"))
-        .agg(round(sum(amount), 2).as("sum_profit"))
+        .agg(round(sum(amount), 2).cast("double").as("sum_profit"))
         .orderBy(col("nation"), col("o_year").desc)
     }),
 
@@ -1026,7 +1036,9 @@ object JoinQueries extends QueryPack {
     "q_tpch_q2_shape" ->
       """WITH offers AS (
         |  SELECT l_partkey, l_suppkey,
-        |         min(round(l_extendedprice / l_quantity, 2)) AS min_cost
+        |         min(round(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
+        |           / CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(18,6)), 2))
+        |           ::DOUBLE AS min_cost
         |  FROM lineitem
         |  WHERE l_partkey IN (SELECT p_partkey FROM part
         |                      WHERE p_type = 'ECONOMY' AND p_size < 15)
@@ -1049,11 +1061,13 @@ object JoinQueries extends QueryPack {
         |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
         |LIMIT 100""".stripMargin,
     "q_tpch_q9_shape" ->
-      """SELECT nation, o_year, round(sum(amount), 2) AS sum_profit
+      """SELECT nation, o_year, round(sum(amount), 2)::DOUBLE AS sum_profit
         |FROM (
         |  SELECT n_name AS nation, year(o_orderdate)::INT AS o_year,
-        |         l_extendedprice * (1 - l_discount)
-        |           - p_retailprice * l_quantity / 10 AS amount
+        |         CAST(l_extendedprice AS DECIMAL(12,2))
+        |           * (1 - CAST(l_discount AS DECIMAL(12,2)))
+        |           - CAST(p_retailprice AS DECIMAL(12,2))
+        |           * CAST(l_quantity AS DECIMAL(12,2)) * 0.1 AS amount
         |  FROM lineitem
         |  JOIN part ON l_partkey = p_partkey
         |  JOIN orders ON l_orderkey = o_orderkey

@@ -1,7 +1,6 @@
 package graft.similarity
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -50,16 +49,7 @@ object RankingCrossoverBench {
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 10, 20)
     val rounds = 3
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     // base scored frame: 64 real query vectors × whole fixture corpus,
     // the exact cosine the ANN operators compute (rounded like pairCos)

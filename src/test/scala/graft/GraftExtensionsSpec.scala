@@ -1,31 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The extension-registered SQL functions must resolve and agree with
-  * their Column-API twins. Needs its own session (extensions bind at
-  * session build).
+  * their Column-API twins. The shared test session is built through
+  * GraftSession, so the extensions are bound on it.
   */
 class GraftExtensionsSpec extends SparkSpecBase {
 
-  // spark.sql.extensions is a STATIC conf — it only binds when the
-  // SparkContext itself is created, and the suite JVM shares one context.
-  // Bind the extensions through the constructor path instead (same thing
-  // a spark-submit --conf spark.sql.extensions=graft.functions.
-  // GraftExtensions startup does).
-  private lazy val extSpark: SparkSession =
-    org.apache.spark.sql.GraftSqlBridge.sessionWithExtensions(
-      spark.sparkContext, new graft.functions.GraftExtensions()(_))
-
   test("vec_dot resolves in SQL and computes the dot product") {
-    val r = extSpark.sql(
+    val r = spark.sql(
       "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .collect()(0).getDouble(0)
     assert(r == 11.0)
   }
 
   test("text functions resolve in SQL and match the Column API") {
-    val r = extSpark.sql(
+    val r = spark.sql(
       """SELECT
         |  simhash60(array('alpha', 'beta')) AS sh,
         |  minhash_sig(array('a b', 'b c'), 4) AS mh,
@@ -42,7 +31,7 @@ class GraftExtensionsSpec extends SparkSpecBase {
     assert(r.getInt(4) == 3)
     assert(r.getDouble(5) > 0.0 && r.getDouble(5) < 0.2) // boilerplate collapses
     assert(r.getSeq[Long](6).nonEmpty && r.getSeq[Long](6).size <= 3) // 6 grams → ≤3 window mins
-    // cross-check simhash vs the Column API on the default session
+    // cross-check simhash vs the Column API
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val viaColumn = Seq("alpha beta").toDF("t")
@@ -52,7 +41,7 @@ class GraftExtensionsSpec extends SparkSpecBase {
   }
 
   test("sign_lsh_band_keys resolves in SQL and matches the Column API") {
-    val fromSql = extSpark.sql(
+    val fromSql = spark.sql(
       "SELECT sign_lsh_band_keys(array(1.0d, -2.0d, 0.5d), 4, 3) AS k")
       .collect()(0).getSeq[String](0)
     assert(fromSql.length == 4 && fromSql.forall(_.length == 3))
@@ -67,19 +56,19 @@ class GraftExtensionsSpec extends SparkSpecBase {
   test("sign_lsh_band_keys: a null ELEMENT yields null keys, not a fake key") {
     // a null slot reading as 0.0 would produce a plausible-looking but
     // arbitrary band key — any-null-in → null-out instead
-    val r = extSpark.sql(
+    val r = spark.sql(
       "SELECT sign_lsh_band_keys(array(1.0d, cast(null as double)), 4, 3) AS k")
       .collect()(0)
     assert(r.isNullAt(0))
     // whole-null vector also null (UnaryExpression default null handling)
-    val r2 = extSpark.sql(
+    val r2 = spark.sql(
       "SELECT sign_lsh_band_keys(cast(null as array<double>), 4, 3) AS k")
       .collect()(0)
     assert(r2.isNullAt(0))
   }
 
   test("random_project resolves in SQL and matches the Column API") {
-    val fromSql = extSpark.sql(
+    val fromSql = spark.sql(
       "SELECT random_project(array(1.0d, -2.0d, 0.5d), 4) AS p")
       .collect()(0).getSeq[Double](0)
     assert(fromSql.length == 4)
@@ -92,7 +81,7 @@ class GraftExtensionsSpec extends SparkSpecBase {
   }
 
   test("bpe functions resolve in SQL against the default merges table") {
-    val r = extSpark.sql(
+    val r = spark.sql(
       """SELECT bpe_merge_count(array('spark', 'xyz')) AS n,
         |       bpe_merge_segment(array('spark', 'xyz')) AS p""".stripMargin)
       .collect()(0)
@@ -101,7 +90,7 @@ class GraftExtensionsSpec extends SparkSpecBase {
   }
 
   test("dedup verify primitives resolve in SQL: sorted_intersect_count, char_hist27, l1_dist") {
-    val r = extSpark.sql(
+    val r = spark.sql(
       """SELECT
         |  sorted_intersect_count(array('a','b','d'), array('b','c','d')) AS ic,
         |  char_hist27('abba z') AS h,
@@ -116,7 +105,7 @@ class GraftExtensionsSpec extends SparkSpecBase {
 
   test("integer parameters must be literals") {
     val e = intercept[Exception] {
-      extSpark.sql("SELECT minhash_sig(array('x'), CAST(rand()*4 AS INT))")
+      spark.sql("SELECT minhash_sig(array('x'), CAST(rand()*4 AS INT))")
         .collect()
     }
     assert(e.getMessage.contains("integer literal") ||

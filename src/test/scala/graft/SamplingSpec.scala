@@ -156,10 +156,15 @@ class SamplingSpec extends SparkSpecBase {
   }
 
   test("GraftSession.local carries the posture configs and extensions") {
-    val s = GraftSession.builder("local[2]", 2).getOrCreate()
+    // the shared test session is built by GraftSession.local
+    val s = SparkTestSession.spark
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
-    // extensions only bind at context creation; in this shared-context
-    // test we just assert the builder sets the conf key
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(s.conf.get("spark.sql.extensions") ==
+      "graft.functions.GraftExtensions")
+    // the extensions are bound, not just named: a graft SQL function resolves
+    val h = s.sql("SELECT simhash60(array('a')) AS h").collect()(0).getLong(0)
+    assert(h >= 0L && h < (1L << 60))
   }
 }

@@ -4,22 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession shared across all suites (sbt forks a single test JVM;
-  * per-suite sessions would pay ~5s startup each). Mirrors the harness
-  * config: UTC, small shuffle partitions, no UI.
+  * per-suite sessions would pay ~5s startup each). Built through the
+  * library's front door, so tests run under the same posture as the mains
+  * (graft extensions bound), on four task slots and shuffle partitions.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {

@@ -9,34 +9,28 @@ import org.apache.spark.sql.functions._
   */
 class TopKRewriteSpec extends SparkSpecBase {
 
-  // extension-bound session (rule + strategy injected); the rewrite is
-  // opt-in per ADVICE (memory-profile change), so the spec enables it.
+  // the rewrite is opt-in per ADVICE (memory-profile change): enable it
+  // on a child session so the shared session's conf stays untouched
   private lazy val extSpark: SparkSession = {
-    val s = org.apache.spark.sql.GraftSqlBridge.sessionWithExtensions(
-      spark.sparkContext, new graft.functions.GraftExtensions()(_))
+    val s = spark.newSession()
     s.conf.set(graft.plans.TopKPerKey.RewriteEnabledKey, "true")
     s
   }
 
   test("malformed enable value warns and stays disabled, queries keep working") {
-    val s = org.apache.spark.sql.GraftSqlBridge.sessionWithExtensions(
-      spark.sparkContext, new graft.functions.GraftExtensions()(_))
+    val s = spark.newSession()
     s.conf.set(graft.plans.TopKPerKey.RewriteEnabledKey, "yes")
-    try {
-      // the rule runs on EVERY plan — a bad knob value must not become a
-      // session-wide query failure
-      val plan = topkIdiom(s, keepRn = false)
-        .queryExecution.optimizedPlan.toString
-      assert(plan.contains("Window"), "malformed conf silently ENABLED the rewrite")
-      import s.implicits._
-      assert(Seq(1, 2, 3).toDF("x").count() == 3) // unrelated query unaffected
-    } finally s.conf.unset(graft.plans.TopKPerKey.RewriteEnabledKey)
+    // the rule runs on EVERY plan — a bad knob value must not become a
+    // session-wide query failure
+    val plan = topkIdiom(s, keepRn = false)
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("Window"), "malformed conf silently ENABLED the rewrite")
+    import s.implicits._
+    assert(Seq(1, 2, 3).toDF("x").count() == 3) // unrelated query unaffected
   }
 
   test("rewrite is off by default (opt-in conf)") {
-    val s = org.apache.spark.sql.GraftSqlBridge.sessionWithExtensions(
-      spark.sparkContext, new graft.functions.GraftExtensions()(_))
-    val plan = topkIdiom(s, keepRn = false)
+    val plan = topkIdiom(spark, keepRn = false)
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("Window"), "rewrite fired without the conf")
   }
