@@ -114,10 +114,12 @@ package graft
   * queries that construction is re-paid inside every timed pass, so
   * median − build_seconds ≈ execution — the construction-vs-execution
   * split the settled-creep attribution needs. The JSON line is also
-  * written to
-  * bench_last.json (override: SPARK_GRAFT_BENCH_OUT) so a truncated
-  * stdout capture can't lose the totals — round 3's committed artifact
-  * lost its tail that way.
+  * written to target/bench_last.json (override: SPARK_GRAFT_BENCH_OUT)
+  * so a truncated stdout capture can't lose the totals — round 3's
+  * committed artifact lost its tail that way — and appended to
+  * target/bench_history.jsonl (override: SPARK_GRAFT_BENCH_HISTORY).
+  * Both default under the git-ignored target/, so a run never rewrites
+  * the committed snapshots in the repository root.
   */
 object Bench {
   val timedPasses = 4
@@ -449,7 +451,7 @@ object Bench {
     val buildSecsJson = buildSecs
       .map { case (k, s) => "\"" + k + "\":" + s }.mkString("{", ",", "}")
     val histFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY",
-      "bench_history.jsonl")
+      "target/bench_history.jsonl")
     // ESCAPE AUDIT, scripted (round 15; previously a manual diff): a
     // methodology bug that lets eager work slip into the untimed build
     // phase shows up as a per-query median COLLAPSING versus the last
@@ -511,12 +513,12 @@ object Bench {
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","bench_rev":$benchRev,"n_queries":${byName.size},"n_failed":${byName.count(!_._3)},"failed":$failed,"pass_env":$envJson,"discarded_pass":$discardedJson,"shuffle_pass":$attribPass,"outlier_reruns":$rerunsJson,"eager_rebuilt":$eagerJson,"build_jobs":$buildJobsJson,"build_seconds":$buildSecsJson,"escape_audit":$escapeAudit,"passes":$allPasses,"shuffle_mb":${mb(shuffleByName)},"sf":"$sfDir","queries":$qs}"""
     println(line)
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_last.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
     catch { case t: Throwable =>
       System.err.println(s"BENCH: could not write $outFile: ${t.getMessage}")
     }
-    // bench_last.json is overwritten every run, which made cross-round
+    // the last-run file is overwritten every run, which made cross-round
     // regression reads lean on stdout archaeology — so every run ALSO
     // appends its line to an append-only history (disable with
     // SPARK_GRAFT_BENCH_HISTORY=/dev/null); per-round snapshots

@@ -25,32 +25,15 @@ object Tables {
     * plan, and every action still scans the parquet bytes. The frame
     * does embed its file listing, so a fixture dir mutated mid-session
     * would be served stale — fixtures are immutable by contract
-    * (TESTDATA.md). Entries for stopped sessions are pruned on touch
-    * (the registry discipline).
+    * (TESTDATA.md). A [[graft.operators.SessionMemo]]: the cap of 256
+    * bounds the short-lived child sessions of the scoped-conf idiom (an
+    * eviction costs one re-inference, nothing else).
     */
-  private val frames = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  /** Entry cap: some queries read through short-lived child sessions
-    * (newSession per construction — the scoped-conf idiom), which share
-    * a live context and so are never pruned; the cap bounds that growth
-    * (eviction costs one re-inference, nothing else).
-    */
-  private val FrameCap = 256
-
-  private def memo(spark: SparkSession, dir: String, name: String)
-                  (build: => DataFrame): DataFrame =
-    frames.synchronized {
-      frames.filterInPlace((k, _) =>
-        try !k._1.sparkContext.isStopped
-        catch { case _: Throwable => false })
-      val v = frames.getOrElseUpdate((spark, dir, name), build)
-      while (frames.size > FrameCap) frames.remove(frames.head._1)
-      v
-    }
+  private val frames =
+    new graft.operators.SessionMemo[(String, String), DataFrame](256)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo(spark, dir, name) { spark.read.parquet(s"$dir/$name.parquet") }
+    frames(spark, (dir, name)) { spark.read.parquet(s"$dir/$name.parquet") }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -76,7 +59,7 @@ object Tables {
     * generations readable with either session posture.
     */
   def events(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "events#normalized") {
+    frames(s, (d, "events#normalized")) {
       val df = load(s, d, "events")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

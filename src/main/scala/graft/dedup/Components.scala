@@ -32,23 +32,14 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** The eager round loops in this file run on the NARROW-LOOP child
-    * session — AQE off + shuffle width = the loop's measured
-    * `numPartitions` — and rebind their readouts back to the caller's
-    * session before returning. Rationale, probe numbers and the
-    * race-freedom argument live at [[graft.operators.NarrowExec]]
-    * (shared with Coreset's greedy rounds).
-    */
-  private def narrowSession(parent: org.apache.spark.sql.SparkSession,
-                            width: Int): org.apache.spark.sql.SparkSession =
-    graft.operators.NarrowExec.session(parent, width)
-
-  private def narrowed(df: DataFrame, width: Int): DataFrame =
-    graft.operators.NarrowExec.narrowed(df, width)
-
-  private def onSession(parent: org.apache.spark.sql.SparkSession,
-                        df: DataFrame): DataFrame =
-    graft.operators.NarrowExec.onSession(parent, df)
+  // The eager round loops in this file run on the NARROW-LOOP child
+  // session — AQE off + shuffle width = the loop's measured
+  // `numPartitions` — and rebind their readouts back to the caller's
+  // session before returning. Rationale, probe numbers and the
+  // race-freedom argument live at [[graft.operators.NarrowExec]]
+  // (shared with Coreset's greedy rounds).
+  import graft.operators.NarrowExec.{narrowed, onSession,
+    session => narrowSession}
 
   /** (id, component) for every node in `edges` (ida, idb); component =
     * min node id reachable. Deterministic.
@@ -430,8 +421,7 @@ object Components {
     // ~1.0 s of the query's ~2.8 s at sf0.1), all id-keyed and
     // partitioning-independent; `numPartitions` should be the measured
     // edge width (GraphMart.EdgeRowsPerPartition rule).
-    val p = graft.operators.NarrowExec.narrowed(
-      pairs.select(col("ida"), col("idb")), numPartitions)
+    val p = narrowed(pairs.select(col("ida"), col("idb")), numPartitions)
     val deg = p.select(col("ida").as("id"))
       .unionAll(p.select(col("idb").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))

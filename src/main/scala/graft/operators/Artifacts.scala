@@ -30,16 +30,11 @@ import org.apache.spark.storage.StorageLevel
   * the cache entry whether or not the Dataset survives (the live
   * Dataset's `unpersist` is preferred when reachable — it also resets
   * the frame's own storage level). Plans over file sources transitively
-  * reference their session, so entries are keyed STRONGLY and dead
-  * sessions are pruned explicitly: every registry touch drops sessions
-  * whose SparkContext has stopped (their cached blocks died with the
-  * context — nothing to free). The registry therefore holds, at most,
-  * live sessions plus already-stopped ones not yet touched over — the
-  * same "never keeps a dead session's data alive" property the old
-  * WeakHashMap bought, without the value-refers-to-key contradiction a
-  * strongly-held plan would introduce there. Duplicate pins of one
-  * canonical plan are harmless — Spark dedupes the cache entry, and
-  * uncache/unpersist are idempotent.
+  * reference their session, so entries are keyed STRONGLY and every
+  * registry touch drops sessions whose SparkContext has stopped (their
+  * cached blocks died with the context — nothing to free). Duplicate
+  * pins of one canonical plan are harmless — Spark dedupes the cache
+  * entry, and uncache/unpersist are idempotent.
   */
 object Artifacts {
 
@@ -53,14 +48,11 @@ object Artifacts {
       (String, java.lang.ref.WeakReference[DataFrame],
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]]
 
-  /** Drop sessions whose context has stopped (call under reg's lock):
-    * their cached blocks were freed with the context, so the entries —
-    * and the session the plans pin — have nothing left to release.
+  /** Drop stopped sessions (call under reg's lock). The registry is not
+    * a [[SessionMemo]]: a cap would drop unpersist handles.
     */
   private def pruneStopped(): Unit =
-    reg.filterInPlace((s, _) =>
-      try !s.sparkContext.isStopped
-      catch { case _: Throwable => false })
+    reg.filterInPlace((s, _) => !SessionMemo.stopped(s))
 
   /** Persist `df` at [[Level]] and register it under `label` for its
     * session. LAZY: the cache fills on first action — right when a
@@ -110,25 +102,18 @@ object Artifacts {
   // is exactly Spark's own CacheManager lookup rule, so the memo hits
   // precisely when the pin itself would dedupe.
   //
-  // Lifetime mirrors the pins: session-scoped, swept by [[releaseAll]]
-  // and by stopped-session pruning — a memoized scalar must never
-  // outlive the artifact it summarizes (a re-pinned artifact after a
-  // release re-runs the action once). Values are tiny (histogram maxima,
-  // bucket counts), but the KEYS hold analyzed plans strongly, and a
-  // LocalRelation-backed plan embeds its driver-built rows (ADVICE r17)
-  // — so entries are CAPPED per session at [[MemoCap]], oldest-first
-  // eviction. Eviction is always safe: values are pure functions of the
-  // plan, so an evicted entry costs exactly one recomputed action.
-  private val memos = scala.collection.mutable.LinkedHashMap
-    .empty[SparkSession, scala.collection.mutable.LinkedHashMap[
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), Any]]
-
-  /** Max memo entries retained per session (oldest evicted beyond it).
-    * Sized for the real use — a handful of pinned artifacts × a few
-    * scalar keys each — while bounding the driver copies a long session
-    * over many DISTINCT driver-built corpora would otherwise accumulate.
-    */
+  // Lifetime mirrors the pins: [[releaseAll]] clears a session's
+  // scalars with its pins, so a memoized scalar never outlives the
+  // artifact it summarizes. The policy is [[SessionMemo]]'s. The KEYS
+  // hold analyzed plans strongly, and a LocalRelation-backed plan embeds
+  // its driver-built rows (ADVICE r17), so [[MemoCap]] bounds the total
+  // across sessions — a handful of pinned artifacts × a few scalar keys
+  // each is the real use. An evicted entry costs one recomputed action.
   val MemoCap: Int = 64
+
+  private val memos = new SessionMemo[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), Any](
+    MemoCap)
 
   /** Memoize `compute` under (`df`'s canonicalized plan, `key`) for
     * `df`'s session. First call runs the action; repeat calls on any
@@ -138,34 +123,11 @@ object Artifacts {
     */
   def memo[T](df: DataFrame, key: String)(compute: => T): T = {
     val plan = org.apache.spark.sql.GraftSqlBridge.analyzed(df).canonicalized
-    val k = (plan, key)
-    val hit = memos.synchronized {
-      pruneStoppedMemos()
-      memos.get(df.sparkSession).flatMap(_.get(k))
-    }
-    hit match {
-      case Some(v) => v.asInstanceOf[T]
-      case None =>
-        val v = compute // outside the lock: actions must not serialize on it
-        memos.synchronized {
-          val m = memos.getOrElseUpdate(df.sparkSession,
-            scala.collection.mutable.LinkedHashMap.empty)
-          m.update(k, v)
-          while (m.size > MemoCap) m.remove(m.head._1) // oldest-first
-        }
-        v
-    }
+    memos(df.sparkSession, (plan, key))(compute).asInstanceOf[T]
   }
 
   /** Memo entry count for `spark` (diagnostics + specs). */
-  def memoized(spark: SparkSession): Int = memos.synchronized {
-    memos.get(spark).map(_.size).getOrElse(0)
-  }
-
-  private def pruneStoppedMemos(): Unit =
-    memos.filterInPlace((s, _) =>
-      try !s.sparkContext.isStopped
-      catch { case _: Throwable => false })
+  def memoized(spark: SparkSession): Int = memos.size(spark)
 
   /** Release every artifact registered for `spark` and clear its
     * registry; returns how many were released. Still-reachable frames
@@ -177,7 +139,7 @@ object Artifacts {
     * no-op on the cache.
     */
   def releaseAll(spark: SparkSession): Int = reg.synchronized {
-    memos.synchronized { memos.remove(spark) } // scalars die with their pins
+    memos.clear(spark) // scalars die with their pins
     val entries = reg.remove(spark).map(_.toList).getOrElse(List.empty)
     pruneStopped()
     entries.foreach { case (_, ref, plan) =>

@@ -378,17 +378,12 @@ object GraphMart {
   private val buildLock = new Object
 
   // Per-session memo over the disk mart (skips even the parquet re-read
-  // for the 12 mart-fed queries of a run). WeakHashMap keyed by the
-  // SESSION OBJECT itself: identity semantics with no hash-collision
-  // risk (an identityHashCode key could collide across GC'd sessions
-  // and serve a frame bound to a stopped SparkContext), and a stopped
-  // session's entries vanish with it. The value carries the frame AND
-  // its measured edge count (one cheap scan of the checkpointed rows,
-  // paid at build), which [[edgePartitions]] derives the per-round
-  // shuffle width from.
-  private val cache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.HashMap[String, (DataFrame, Long)]]()
+  // for the 12 mart-fed queries of a run), keyed by the canonical fixture
+  // path; entries go when their context stops or beyond 64 (oldest
+  // first). The value carries the frame AND its measured edge count (one
+  // cheap scan of the checkpointed rows, paid at build), which
+  // [[edgePartitions]] derives the per-round shuffle width from.
+  private val cache = new SessionMemo[String, (DataFrame, Long)](64)
 
   /** Edge rows per per-round shuffle partition for the iterative graph
     * ops (round 18, guide §2.2 "fewer, larger partitions" / §2 scale-
@@ -432,11 +427,9 @@ object GraphMart {
     * key built and checkpointed the same mart once per spelling).
     * Mid-session fixture rewrites are caught at the DISK layer (the
     * fingerprint manifest) only on the first per-session read — the
-    * memoized frame itself is immutable for the session's lifetime.
-    * The build runs OUTSIDE the cache lock (it can be a multi-second
-    * Spark job — holding a global monitor across it would serialize
-    * unrelated callers); two racing first callers may both build, the
-    * first insert wins and the loser's checkpoint is GC-reclaimed.
+    * memoized frame itself is immutable while its memo entry lives.
+    * The build runs outside the memo's lock; a racing loser's
+    * checkpoint is GC-reclaimed.
     */
   def cachedEdges(spark: SparkSession, dir: String,
                   numPartitions: Int = 8): DataFrame =
@@ -452,20 +445,11 @@ object GraphMart {
                                    numPartitions: Int = 8)
       : (DataFrame, Long) = {
     val key = new java.io.File(dir).getCanonicalPath
-    val hit = cache.synchronized {
-      cache.computeIfAbsent(spark,
-        _ => scala.collection.mutable.HashMap.empty).get(key)
-    }
-    hit.getOrElse {
+    cache(spark, key) {
       val built = edges(diskCounts(spark, key))
         .repartition(numPartitions, col("src"))
         .localCheckpoint(true)
-      val entry = (built, built.count())
-      cache.synchronized {
-        val perSession = cache.computeIfAbsent(spark,
-          _ => scala.collection.mutable.HashMap.empty)
-        perSession.getOrElseUpdate(key, entry)
-      }
+      (built, built.count())
     }
   }
 }

@@ -28,30 +28,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Child sessions (the repo's scoped-conf idiom — q_join_runtime_bloom
   * precedent) keep the regime RACE-FREE: nothing mutates the caller's
   * session conf, so concurrently-running suites on a shared session
-  * never observe it. Sessions are memoized per (parent, width) —
-  * session state is not free to rebuild per call — and pruned when
-  * their context stops (the Artifacts registry discipline). Loop
-  * RESULTS must be rebound onto the parent session before returning
-  * ([[onSession]]), so callers compose and execute readouts under
-  * their own confs.
+  * never observe it. A child copies the parent's modifiable runtime
+  * SQL confs (ANSI mode and the like, which `newSession()` would drop)
+  * before pinning the two knobs, and is memoized per (parent, width,
+  * conf snapshot): a later parent conf change gets a fresh child, and
+  * no child is mutated after creation. Loop RESULTS must be rebound
+  * onto the parent session before returning ([[onSession]]), so
+  * callers compose and execute readouts under their own confs.
   */
 object NarrowExec {
 
-  private val sessions = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, Int), SparkSession]
+  private val sessions =
+    new SessionMemo[(Int, Map[String, String]), SparkSession](64)
 
-  def session(parent: SparkSession, width: Int): SparkSession =
-    sessions.synchronized {
-      sessions.filterInPlace((k, _) =>
-        try !k._1.sparkContext.isStopped
-        catch { case _: Throwable => false })
-      sessions.getOrElseUpdate((parent, width), {
-        val s = parent.newSession()
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        s.conf.set("spark.sql.shuffle.partitions", width.toString)
-        s
-      })
+  def session(parent: SparkSession, width: Int): SparkSession = {
+    val confs = parent.conf.getAll.filter(kv => parent.conf.isModifiable(kv._1))
+    sessions(parent, (width, confs)) {
+      val s = parent.newSession()
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      s.conf.set("spark.sql.shuffle.partitions", width.toString)
+      s
     }
+  }
 
   /** Rebind `df` onto the narrow session for `width` (the plan is
     * already analyzed under the caller's session — resolution is

@@ -1,6 +1,6 @@
 package graft.telemetry
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental lake maintenance — the capability the reference's
@@ -33,15 +33,23 @@ object Incremental {
 
   /** One-time initialization (or disaster rebuild): the same gold rows the
     * batch pipeline produces, laid out partitioned by dt so per-day
-    * overwrites are possible.
+    * overwrites are possible. Returns the rows written.
     */
   def initPartitionedGold(spark: SparkSession, lakeDir: String): Long = {
     val silver = Silver.gpuTimeseries(
       Bronze.readBronze(spark, lakeDir, "bronze_machine_metrics"))
-    val gold = Gold.clusterUtilDaily(silver)
-    gold.write.mode("overwrite").partitionBy("dt")
-      .parquet(goldPartDir(lakeDir))
-    readPartitionedGold(spark, lakeDir).count()
+    writeCounted(Gold.clusterUtilDaily(silver)) {
+      _.write.mode("overwrite").partitionBy("dt").parquet(goldPartDir(lakeDir))
+    }
+  }
+
+  /** Run `write` on `df` and return the rows it wrote: the count rides
+    * the write job through an Observation (the Bronze.ingestTable idiom).
+    */
+  private def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
   }
 
   def readPartitionedGold(spark: SparkSession, lakeDir: String): DataFrame =
@@ -161,13 +169,14 @@ object Incremental {
   def appendMetricsFrame(batch: DataFrame, lakeDir: String,
                          batchId: Option[Long] = None): AppendResult = {
     val spark = batch.sparkSession
-    val newRows = batch.count()
     // 1. append-only bronze: new files land next to history, no rewrite;
     //    replayable batches go through the idempotent prefixed path
     val bronzeDir = s"$lakeDir/bronze/bronze_machine_metrics.parquet"
-    batchId match {
-      case Some(id) => appendBatchIdempotent(batch, bronzeDir, id)
-      case None => batch.write.mode("append").parquet(bronzeDir)
+    val newRows = writeCounted(batch) { b =>
+      batchId match {
+        case Some(id) => appendBatchIdempotent(b, bronzeDir, id)
+        case None => b.write.mode("append").parquet(bronzeDir)
+      }
     }
 
     // 2. which gold days does the batch touch? (bounded collect: one row
@@ -188,18 +197,15 @@ object Incremental {
     val touchedGold = Gold.clusterUtilDaily(fullSilver)
 
     // 4. dynamic partition overwrite: replace exactly the touched dt
-    //    directories, leave every other partition's files untouched.
-    //    Cache so the post-write row count reads what was written instead
-    //    of re-running the aggregate — a touched day can legitimately
-    //    produce NO gold row (all its gpu_util values NULL: Silver keeps
-    //    the rows, Gold filters them), so days.size would overcount.
-    touchedGold.persist()
-    try {
-      touchedGold.write.mode("overwrite")
+    //    directories, leave every other partition's files untouched. Count
+    //    what was written: a day whose gpu_util is all NULL yields no gold
+    //    row (Silver keeps the rows, Gold filters them).
+    val goldRows = writeCounted(touchedGold) {
+      _.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("dt")
         .parquet(goldPartDir(lakeDir))
-      AppendResult(newRows, days.sortBy(_.getTime), touchedGold.count())
-    } finally { touchedGold.unpersist(); () }
+    }
+    AppendResult(newRows, days.sortBy(_.getTime), goldRows)
   }
 }

@@ -120,4 +120,24 @@ class ArtifactsSpec extends SparkSpecBase {
     assert(Artifacts.releaseAll(spark) >= 2)
     assert(Artifacts.registered(spark).isEmpty)
   }
+
+  test("leakageSafeSplit memoizes its component labels and reuses them on " +
+    "repeat; q_dedup_clusters_star adds no memo entry") {
+    Artifacts.releaseAll(spark)
+    val docs = (1L to 10L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    def split() = graft.sampling.Sampling.leakageSafeSplit(docs, "doc_id",
+      Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("ida", "idb"), 0.2)._1.count()
+    def labelPins() = Artifacts.registered(spark).count(_ == "components.labels")
+    split()
+    assert(Artifacts.memoized(spark) == 1, "the split did not memoize")
+    assert(labelPins() == 1)
+    split()
+    assert(Artifacts.memoized(spark) == 1, "the repeat added a memo entry")
+    assert(labelPins() == 1, "the repeat recomputed the labels")
+    Artifacts.releaseAll(spark)
+    SparkEntry.queries("q_dedup_clusters_star")(spark, sfDir).collect()
+    assert(Artifacts.memoized(spark) == 0,
+      "the distributed-path witness must time the star loop, not a memo")
+    Artifacts.releaseAll(spark)
+  }
 }
