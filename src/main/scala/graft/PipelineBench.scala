@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *
   * Output: one JSON line `{"metric":"pipeline_total","value":…,
   * "stages":{name:[sec,rows,task_gc_ms,spill_mb],…}}`, also written to
-  * $SPARK_GRAFT_PIPE_OUT (default pipeline_last.json).
+  * $SPARK_GRAFT_PIPE_OUT (default target/pipeline_last.json).
   */
 object PipelineBench {
   def main(args: Array[String]): Unit = {
@@ -102,49 +102,13 @@ object PipelineBench {
     }
 
     // 3. Near-dup pairs: 120-bit simhash over the canonicals (pins the
-    // (id,h1,h2) sketch frame — the cross-stage shared artifact).
-    // Route history, because the default CHANGED on evidence three
-    // times: the d300 probe (dedup-first enumerators) measured
-    // all-pairs at 335.6 s/d1000 and the spanning star became the
-    // default with a documented one-sided miss (+0.47%/+0.90%/+1.74%
-    // docs kept that the exact route merges). The round-15 closed-star
-    // work then showed most of that wall was the dropDuplicates-
-    // before-verify shuffle (verify-first all-pairs: 12.6 s at d1000,
-    // probes/r15/dedup_probe_d1000_closed.json) and the default went
-    // back to exact all-pairs. Round 16 retires the corpus-wide choice
-    // entirely: the default is the per-BUCKET dispatch
-    // (Dedup.simhashPairsWideAdaptive — all-pairs below a population
-    // bound, closed-star above), component-exact for this pipeline's
-    // clustering consumer by construction at ANY bound, all-pairs cost
-    // on sane corpora, bounded cost in ultra-hot template buckets.
-    // SPARK_GRAFT_PIPE_ROUTE pins an A/B leg explicitly: "allpairs" /
-    // "star" (lossy spanning star) / "closed" (corpus-wide closed
-    // star) / "adaptive".
-    val route = sys.env.get("SPARK_GRAFT_PIPE_ROUTE")
-      .orElse(sys.env.get("SPARK_GRAFT_PIPE_ALLPAIRS")
-        .filter(_ == "1").map(_ => "allpairs"))
-      .getOrElse("adaptive")
-    // fail fast on a typo'd route: a misspelled leg silently measuring
-    // the default would label an A/B artifact with the wrong leg
-    // (judge advice r15)
-    require(Set("allpairs", "star", "closed", "adaptive").contains(route),
-      s"PipelineBench: unknown SPARK_GRAFT_PIPE_ROUTE '$route' " +
-        "(allpairs | star | closed | adaptive)")
+    // (id,h1,h2) sketch frame — the cross-stage shared artifact). The
+    // per-bucket adaptive route is component-exact for the clustering
+    // consumer at any bound, with all-pairs cost on ordinary corpora and
+    // bounded cost in ultra-hot template buckets (Dedup scaladoc).
     val pairs = stage("neardup_pairs") {
-      route match {
-        case "star" =>
-          graft.dedup.Dedup.simhashStarPairsWide(canonicals, "text",
-            "doc_id", maxHamming = 3)
-        case "closed" =>
-          graft.dedup.Dedup.simhashStarPairsWideClosed(canonicals, "text",
-            "doc_id", maxHamming = 3)
-        case "adaptive" =>
-          graft.dedup.Dedup.simhashPairsWideAdaptive(canonicals, "text",
-            "doc_id", maxHamming = 3)
-        case _ =>
-          graft.dedup.Dedup.simhashPairsWide(canonicals, "text", "doc_id",
-            maxHamming = 3)
-      }
+      graft.dedup.Dedup.simhashPairsWideAdaptive(canonicals, "text",
+        "doc_id", maxHamming = 3)
     }
 
     // 4. Clean: cluster the pairs, keep each cluster's BEST copy (by
@@ -184,10 +148,10 @@ object PipelineBench {
         "," + gcMs + "," + math.round(spillMb) + "]"
     }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"pipeline_total","value":${math.round(total * 100) / 100.0},"unit":"sec","sf":"$sfDir","route":"$route","n_shards":$nShards,"stages":$stagesJson}"""
+      s"""{"metric":"pipeline_total","value":${math.round(total * 100) / 100.0},"unit":"sec","sf":"$sfDir","n_shards":$nShards,"stages":$stagesJson}"""
     println(line)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_PIPE_OUT",
-      "pipeline_last.json")
+      "target/pipeline_last.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), line + "\n")
     catch { case t: Throwable =>

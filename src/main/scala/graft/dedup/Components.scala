@@ -134,20 +134,10 @@ object Components {
     * Self-loops are dropped as they appear; both phases emit distinct
     * edge sets, so the convergence probe (same count + empty exceptAll)
     * is an exact set-equality check on the round's checkpointed output.
-    */
-  private[graft] def largeSmallStar(edges: DataFrame, maxIter: Int = 20,
-                                    numPartitions: Int = 8): DataFrame = {
-    val cur = edges.select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .repartition(numPartitions, col("u"))
-      .localCheckpoint(eager = true)
-    starLoopFrom(cur, cur.count(), maxIter, numPartitions)
-  }
-
-  /** The iteration itself; `cur0` must be self-loop-free, distinct, and
-    * already MATERIALIZED (checkpointed) with `cur0Count` rows —
-    * callers have both in hand (the driver-dispatch count), so the loop
+    *
+    * `cur0` must be self-loop-free, distinct, and already MATERIALIZED
+    * (checkpointed) with `cur0Count` rows — the caller has both in hand
+    * (the driver-dispatch count), so the loop
     * never re-materializes or re-counts its input (round 18: the old
     * entry re-checkpointed the just-checkpointed canonical set, and
     * each round re-counted the previous round's output it had already
@@ -198,9 +188,9 @@ object Components {
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"largeSmallStar did not converge in $maxIter rounds — raise maxIter " +
-        "(needed rounds grow with log(component diameter), so this " +
-        "indicates a pathological graph or too small a bound)")
+      s"large-star/small-star did not converge in $maxIter rounds — " +
+        "raise maxIter (needed rounds grow with log(component diameter), " +
+        "so this indicates a pathological graph or too small a bound)")
     onSession(parent,
       bothDirections(cur)
         .groupBy(col("u").as("id"))
@@ -211,7 +201,8 @@ object Components {
   /** One-hop min-label propagation — O(graph diameter) rounds. Retained
     * as the parity ORACLE for the star path (an independent formulation
     * specs can cross-check) and as the readable textbook baseline; the
-    * production distributed path is `largeSmallStar`.
+    * production distributed path is the large-star/small-star loop
+    * (`starLoopFrom`).
     */
   private[graft] def minLabelComponents(edges: DataFrame, maxIter: Int = 20,
                                         numPartitions: Int = 8): DataFrame = {
@@ -1173,9 +1164,7 @@ object Components {
 
   /** ONE synchronous peel round over the live edge set — degrees within
     * the live subgraph, survivors kept, edge working set shrunk only
-    * when someone dropped. Shared by kCore and kCorePeelTrace so the
-    * bench diagnostic can never drift from the operator's semantics.
-    * Returns (survivingEdges, survivorCount).
+    * when someone dropped. Returns (survivingEdges, survivorCount).
     */
   private def peelRound(eLive: DataFrame, k: Int, prevN: Long,
                         numPartitions: Int): (DataFrame, Long) = {
@@ -1193,37 +1182,6 @@ object Components {
           .localCheckpoint(eager = true)
       else eLive
     (e2, n2)
-  }
-
-  /** BENCH-mode peel: the same synchronous peel as kCore but pinned to
-    * EXACTLY `rounds` rounds (no early stop — idempotence makes the
-    * post-convergence rounds semantic no-ops), returning driver-side
-    * per-round (round, liveNodes, liveEdges, seconds). This is the
-    * diagnostic that separates round COUNT (data-dependent: a path
-    * graph peels O(n) rounds) from per-round COST (the thing that must
-    * stay linear at 10×) — the one number kCore's end-to-end wall
-    * clock conflates. Not a query operator: the returned Seq is
-    * `rounds` tuples; the peel work itself stays distributed.
-    */
-  def kCorePeelTrace(edges: DataFrame, k: Int, rounds: Int,
-                     numPartitions: Int = 8): Seq[(Int, Long, Long, Double)] = {
-    require(k >= 1 && k <= 1000000, s"kCorePeelTrace: k $k out of [1, 1e6]")
-    require(rounds >= 1 && rounds <= 200,
-      s"kCorePeelTrace: rounds $rounds out of [1,200]")
-    var eLive = bidirectedEdges(edges, numPartitions, dedupe = true)
-    var n = eLive.select(col("src")).distinct().count()
-    (1 to rounds).map { round =>
-      val t0 = System.nanoTime()
-      val (e2, n2) = peelRound(eLive, k, n, numPartitions)
-      // timing window closes BEFORE the liveEdges diagnostic count —
-      // that scan is instrumentation, not peel work, and at scale it
-      // would inflate exactly the per-round cost this trace isolates
-      val sec = (System.nanoTime() - t0) / 1e9
-      eLive = e2
-      n = n2
-      val m = eLive.count()
-      (round, n, m, sec)
-    }
   }
 
   /** WEIGHTED landmark distances — bfsDistances' cost twin and the last

@@ -1291,6 +1291,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   def simhashPairs(docs: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3): DataFrame = {
+    require(0 <= maxHamming && maxHamming <= 3,
+      s"simhashPairs: maxHamming $maxHamming out of [0, 3] — four chunks " +
+        "guarantee a shared bucket only up to distance 3")
     val sh = simhashDocs(docs, textCol, idCol)
     val chunks = array(
       shiftright(col("simhash"), 0).bitwiseAND(lit(32767L)),
@@ -1299,8 +1302,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       shiftright(col("simhash"), 45).bitwiseAND(lit(32767L)))
     val e = sh.select(col("id"), col("simhash"),
       posexplode(chunks).as(Seq("c", "v")))
-    // verify before the pair-dedup shuffle — same reordering as
-    // simhashPairsWide (see the comment there; output bit-identical)
+    // verify before the pair-dedup shuffle, as in bucketPairs
     e.select(col("id").as("ida"), col("simhash").as("ha"),
         col("c"), col("v"))
       .join(e.select(col("id").as("idb"), col("simhash").as("hb"),
@@ -1313,378 +1315,246 @@ object Dedup extends org.apache.spark.internal.Logging {
       .select("ida", "idb", "hamming")
   }
 
-  /** WIDE-chunk SimHash near-dup pairs — the 100-TB twin of simhashPairs.
+  // ------------------------------------------------------------------
+  // 120-bit SimHash near-dup pairs. The four public routes below share
+  // one sketch, one bucket explode and one verify; they differ only in
+  // which members of a bucket pair with whom. Every route dedups the
+  // (ida, idb) pair once, at its end: a pair can share up to four
+  // buckets, and the Hamming value is a function of the pair.
+  // ------------------------------------------------------------------
+
+  /** The unpinned 120-bit sketch (id, h1, h2): simhash60 ∥ simhash60Tail,
+    * the two md5 hex halves with one vote loop each. Why 120 bits: the
+    * 60-bit [[simhashPairs]]' 2^15 buckets per chunk SATURATE on a
+    * same-vocabulary corpus once docs ≫ 32k, and candidates go quadratic
+    * (BASELINE.md round-10). Capping hot buckets would be a recall hole,
+    * not a tail cut; 30-bit chunks move saturation from ~10⁵ to ~10⁹
+    * docs per chunk value under the same pigeonhole guarantee, with a
+    * finer similarity (3 flipped bits of 120 ≈ 97.5% bitwise agreement
+    * vs 95% of 60).
     *
-    * simhashPairs' 4×15-bit chunk LSH has 2^15 = 32,768 buckets per
-    * chunk position; on a same-vocabulary corpus the buckets SATURATE
-    * once docs ≫ bucket space and candidate volume goes quadratic
-    * (measured on the 30× scaled fixture: EVERY 15-bit bucket holds
-    * > 20 docs and total candidates hit 2.6e8 — BASELINE.md round-10).
-    * Capping hot buckets is wrong here: the pigeonhole guarantee
-    * (hamming ≤ 3 ⇒ some chunk exact) means a dropped bucket is a hard
-    * recall hole, not a tail cut. The scale-correct fix is MORE BITS:
-    * a 120-bit SimHash (simhash60 ∥ simhash60Tail — the two md5 hex
-    * halves, one vote loop each) banded as 4×30-bit chunks. Bucket
-    * space per chunk becomes 2^30 ≈ 1.07e9 — saturation moves from
-    * ~10⁵ docs to ~10⁹ per chunk value, with the SAME pigeonhole
-    * guarantee (4 chunks, ≤ 3 mismatched bits ⇒ one chunk exact) and a
-    * FINER similarity semantic (3 flipped bits of 120 ≈ 97.5% bitwise
-    * agreement vs 95% at 60 — near-dup thresholds tighten as signature
-    * width grows, the standard SimHash tradeoff).
-    *
-    * Same shapes as simhashPairs otherwise: one chunk-exploded
-    * equi-join (never a theta join), dropDuplicates on the pair,
-    * exact 120-bit Hamming verify as two codegen'd bit_counts.
+    * Every wide route starts here, so this is where `maxHamming` is
+    * bounded: four chunks guarantee a shared bucket only for distance
+    * ≤ 3 (pigeonhole), and a larger bound would silently drop pairs.
     */
-  def simhashPairsWide(docs: DataFrame, textCol: String, idCol: String,
-                       maxHamming: Int = 3): DataFrame = {
+  private def wideSketch(docs: DataFrame, textCol: String, idCol: String,
+                         maxHamming: Int): DataFrame = {
+    require(0 <= maxHamming && maxHamming <= 3,
+      s"simhash: maxHamming $maxHamming out of [0, 3] — four chunks " +
+        "guarantee a shared bucket only up to distance 3")
+    docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .filter(size(col("toks")) > 0)
+      .select(col("id"), simhash60(col("toks")).as("h1"),
+        simhash60Tail(col("toks")).as("h2"))
+  }
+
+  /** One row per (doc, chunk): (id, h1, h2, c, v) with `v` the c-th
+    * 30-bit chunk of h1 ∥ h2 — the (c, v) bucket key. Any pair within
+    * Hamming 3 agrees on at least one chunk, so it shares a bucket;
+    * candidates are therefore an EQUI-join on (c, v), never a theta join.
+    */
+  private def wideBuckets(sh: DataFrame): DataFrame = {
     val mask30 = (1L << 30) - 1
-    // The 120-bit sketch frame (id, h1, h2) is a 24 B/doc artifact: pin
-    // and fill it once so the chunk self-join's two sides read ONE
-    // tokenize+simhash pass (lazily each side re-hashed the corpus —
-    // round-13 plan audit; consumed within this call graph, so the
-    // eager fill is the tf-shaped case, not the band-index one).
-    val sh = graft.operators.Artifacts.pinEager(
-      docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-        .filter(size(col("toks")) > 0)
-        .select(col("id"), simhash60(col("toks")).as("h1"),
-          simhash60Tail(col("toks")).as("h2")),
-      "simhash.sketch")
-    val chunks = array(
-      col("h1").bitwiseAND(lit(mask30)),
-      shiftright(col("h1"), 30).bitwiseAND(lit(mask30)),
-      col("h2").bitwiseAND(lit(mask30)),
-      shiftright(col("h2"), 30).bitwiseAND(lit(mask30)))
-    val e = sh.select(col("id"), col("h1"), col("h2"),
-      posexplode(chunks).as(Seq("c", "v")))
-    // hamming verify BEFORE the pair-dedup: the filter is a per-row
-    // function of columns already riding the join, while dropDuplicates
-    // is a SHUFFLE of every enumerated candidate — on dup-heavy corpora
-    // candidates outnumber verified pairs ~400:1 (d300: 27.6M → 67k),
-    // so dedup-first shuffled 27.6M wide rows to discard 99.8% of them
-    // right after. Found by the round-15 closed-star probe, where
-    // verify-first made the MORE-candidates route faster; output is
-    // bit-identical (hamming is a function of the pair).
+    sh.select(col("id"), col("h1"), col("h2"),
+      posexplode(array(
+        col("h1").bitwiseAND(lit(mask30)),
+        shiftright(col("h1"), 30).bitwiseAND(lit(mask30)),
+        col("h2").bitwiseAND(lit(mask30)),
+        shiftright(col("h2"), 30).bitwiseAND(lit(mask30))))
+        .as(Seq("c", "v")))
+  }
+
+  /** Exact 120-bit Hamming distance between the sketches in columns
+    * `a`1/`a`2 and `b`1/`b`2 — two codegen'd bit_counts.
+    */
+  private def hamming120(a: String, b: String): Column =
+    bit_count(col(a + "1").bitwiseXOR(col(b + "1"))) +
+      bit_count(col(a + "2").bitwiseXOR(col(b + "2")))
+
+  /** Every verified pair (ida < idb, hamming ≤ maxHamming) within the
+    * buckets of `e` (a [[wideBuckets]] frame, possibly filtered), not
+    * deduplicated. The verify runs BEFORE the caller's pair dedup: it is
+    * a per-row function of columns already riding the join, while the
+    * dedup shuffles every row it sees, and on dup-heavy corpora
+    * candidates outnumber verified pairs ~400:1 (d300: 27.6M → 67k,
+    * BASELINE.md round 15).
+    */
+  private def bucketPairs(e: DataFrame, maxHamming: Int): DataFrame =
     e.select(col("id").as("ida"), col("h1").as("ha1"),
         col("h2").as("ha2"), col("c"), col("v"))
       .join(e.select(col("id").as("idb"), col("h1").as("hb1"),
           col("h2").as("hb2"), col("c").as("cb"), col("v").as("vb")),
         col("c") === col("cb") && col("v") === col("vb") &&
           col("ida") < col("idb"))
-      .withColumn("hamming",
-        bit_count(col("ha1").bitwiseXOR(col("hb1"))) +
-          bit_count(col("ha2").bitwiseXOR(col("hb2"))))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("ida", "idb")
-      .select("ida", "idb", "hamming")
-  }
-
-  /** The CLUSTERING-ROUTE twin of [[simhashPairsWide]]: a SPANNING pair
-    * set instead of all pairs — per (chunk, value) bucket every member
-    * pairs with the bucket's MIN id only (a star), then the same exact
-    * 120-bit Hamming verify. Candidate volume per bucket drops from
-    * n(n−1)/2 to n−1.
-    *
-    * Why it exists (round 14, found by the d300 pipeline probe): bucket
-    * candidates on a dup-heavy corpus grow QUADRATICALLY in cluster
-    * size — a genuine 972-doc near-dup cluster is 472k all-pairs
-    * candidates from one bucket (measured: 4.19M → 31.1M candidates for
-    * 3× the docs, diversify-100× → 300×; BASELINE.md). More signature
-    * bits cannot help — near-identical docs share chunks BY DESIGN.
-    * But downstream CLUSTERING (dupClusters / cleanCorpus*) only needs
-    * connectivity, and for that an all-pairs enumeration is pure waste:
-    * Σ nᵢ−1 spanning candidates connect exactly the same tight clusters.
-    *
-    * The trade, stated precisely: the verified star is a SUBGRAPH of the
-    * verified all-pairs graph, so components can only split, never
-    * merge wrongly. A cluster whose members all sit within `maxHamming`
-    * of the bucket-min (replica/template dups — the blow-up case this
-    * exists for) connects IDENTICALLY; a hamming-chain a−b−c where only
-    * the through-b links pass can lose the a−c component link if b is
-    * never a bucket min (DedupSpec pins the subset/hamming-agreement/
-    * tight-cluster-equality properties; the chain under-merge is
-    * MEASURED, not planted — the survivors_only_* counts in BASELINE.md
-    * "Round-15 measurement: star vs all-pairs near-dup enumeration").
-    * Measured there: the miss is strictly one-sided — cleanCorpusBest over star pairs keeps every doc the
-    * all-pairs route keeps plus 0.47% at d100 / 0.90% at d300 — while
-    * candidates drop 6.2× / 11.9× and grow ~linearly (3.8× per 3×
-    * docs) where all-pairs grows 7.4×. Use [[simhashPairsWide]] when
-    * the PAIR SET is the product; use this when feeding connected
-    * components at scale.
-    *
-    * Round-15 re-framing (BASELINE.md "the quadratic that was mostly a
-    * shuffle"): the WALL-clock gap those probes measured came largely
-    * from the enumerators' old dedup-before-verify shuffle, since
-    * fixed — verify-first all-pairs runs 12.6 s at d1000 vs 7.1 s
-    * here, so the exact route is the pipeline default again. The
-    * candidate-count asymmetry itself is unchanged and this route
-    * remains the Σn² insurance for ultra-hot tight buckets; for exact
-    * components at adaptive cost see [[simhashStarPairsWideClosed]].
-    */
-  def simhashStarPairsWide(docs: DataFrame, textCol: String, idCol: String,
-                           maxHamming: Int = 3): DataFrame = {
-    val mask30 = (1L << 30) - 1
-    val sh = graft.operators.Artifacts.pinEager(
-      docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-        .filter(size(col("toks")) > 0)
-        .select(col("id"), simhash60(col("toks")).as("h1"),
-          simhash60Tail(col("toks")).as("h2")),
-      "simhash.sketch") // same sketch artifact as the all-pairs route
-    val chunks = array(
-      col("h1").bitwiseAND(lit(mask30)),
-      shiftright(col("h1"), 30).bitwiseAND(lit(mask30)),
-      col("h2").bitwiseAND(lit(mask30)),
-      shiftright(col("h2"), 30).bitwiseAND(lit(mask30)))
-    val e = sh.select(col("id"), col("h1"), col("h2"),
-      posexplode(chunks).as(Seq("c", "v")))
-    // the bucket min rides a window-free keyed aggregate, then one
-    // equi-join back picks up each member — n−1 star pairs per bucket
-    val mins = e.groupBy("c", "v").agg(min(col("id")).as("ida"))
-    val cand = e.join(mins, Seq("c", "v"))
-      .filter(col("id") =!= col("ida"))
-      .select(col("ida"), col("id").as("idb"))
-      .dropDuplicates("ida", "idb")
-    // hashes re-joined from the pinned sketch (tiny, id-keyed) rather
-    // than carried through the explode — the star join stays 3 columns
-    val withA = cand
-      .join(sh.select(col("id").as("ida"), col("h1").as("ha1"),
-        col("h2").as("ha2")), "ida")
-      .join(sh.select(col("id").as("idb"), col("h1").as("hb1"),
-        col("h2").as("hb2")), "idb")
-    withA
-      .withColumn("hamming",
-        bit_count(col("ha1").bitwiseXOR(col("hb1"))) +
-          bit_count(col("ha2").bitwiseXOR(col("hb2"))))
+      .withColumn("hamming", hamming120("ha", "hb"))
       .filter(col("hamming") <= maxHamming)
       .select("ida", "idb", "hamming")
-  }
 
-  /** The CONNECTIVITY-CLOSED star route: [[simhashStarPairsWide]]'s
-    * spanning enumeration PLUS every verified pair with a hub-FAILED
-    * endpoint — per (chunk, value) bucket, members whose 120-bit
-    * Hamming to the bucket-min hub exceeds `maxHamming` re-enumerate
-    * against the whole bucket.
-    *
-    * Why: the plain star is one-sided-lossy for CLUSTERING — a
-    * hamming-chain a−b−c where only the through-b links pass loses the
-    * a−c component link when b is never a bucket min (measured, not
-    * hypothetical: cleanCorpusBest over star pairs keeps +0.47% / +0.90%
-    * / +1.74% of docs the all-pairs route merges away at d100/d300/d1000
-    * — BASELINE.md round 15). This closes that gap EXACTLY, provably:
-    * per bucket, the emitted edges are {hub−p : p passed} ∪ {every
-    * verified edge touching a failed member}. The only all-pairs edges
-    * not emitted are passed−passed pairs — whose endpoints are already
-    * connected through the hub — so the closed subgraph has IDENTICAL
-    * connected components to the all-pairs graph (every true pair
-    * shares ≥ 1 bucket by the pigeonhole guarantee, and within any
-    * shared bucket both endpoints land in one of the covered cases).
-    * DedupSpec pins the planted chain case and a randomized
-    * components-equality property; q_dedup_clusters_simhash_closed
-    * hash-checks the equivalence cross-engine against the ALL-PAIRS
-    * recursive closure in DuckDB.
-    *
-    * Cost shape: Σ_buckets (n−1) star candidates + |failed|·(n−1) patch
-    * candidates — still linear in bucket population whenever the hub
-    * represents its bucket (replica/template clusters, the blow-up case
-    * the star exists for; failed members there are chunk-colliding
-    * strangers, a thin tail). A bucket whose hub represents nobody
-    * degrades toward all-pairs for that bucket only — cost adapts per
-    * bucket, correctness never depends on it.
+  /** Each bucket member of `e` next to its bucket's hub: `hubs` holds
+    * (c, v, hub, …) per bucket, and `hham` is the member's Hamming to
+    * the hub's sketch (looked up in `sh` by id).
     */
-  def simhashStarPairsWideClosed(docs: DataFrame, textCol: String,
-                                 idCol: String, maxHamming: Int = 3)
-      : DataFrame = {
-    val mask30 = (1L << 30) - 1
-    val sh = graft.operators.Artifacts.pinEager(
-      docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-        .filter(size(col("toks")) > 0)
-        .select(col("id"), simhash60(col("toks")).as("h1"),
-          simhash60Tail(col("toks")).as("h2")),
-      "simhash.sketch") // same sketch artifact as the sibling routes
-    val chunks = array(
-      col("h1").bitwiseAND(lit(mask30)),
-      shiftright(col("h1"), 30).bitwiseAND(lit(mask30)),
-      col("h2").bitwiseAND(lit(mask30)),
-      shiftright(col("h2"), 30).bitwiseAND(lit(mask30)))
-    val e = sh.select(col("id"), col("h1"), col("h2"),
-      posexplode(chunks).as(Seq("c", "v")))
-    val mins = e.groupBy("c", "v").agg(min(col("id")).as("hub"))
-    // per (bucket, member): the hub-distance verdict drives BOTH outputs
-    val withHub = e.join(mins, Seq("c", "v"))
+  private def withHub(e: DataFrame, hubs: DataFrame,
+                      sh: DataFrame): DataFrame =
+    e.join(hubs, Seq("c", "v"))
       .join(sh.select(col("id").as("hub"), col("h1").as("hh1"),
         col("h2").as("hh2")), "hub")
-      .withColumn("hham",
-        bit_count(col("h1").bitwiseXOR(col("hh1"))) +
-          bit_count(col("h2").bitwiseXOR(col("hh2"))))
-    val star = withHub
-      .filter(col("id") =!= col("hub") && col("hham") <= maxHamming)
-      .select(col("hub").as("ida"), col("id").as("idb"),
+      .withColumn("hham", hamming120("h", "hh"))
+
+  /** The star edges of a [[withHub]] frame: hub−member for every member
+    * that passes its hub verify, not deduplicated. least/greatest, not
+    * (hub, id): a hub that is not its bucket's min id would otherwise
+    * emit ida > idb, and the same pair arriving ordered from another
+    * bucket would survive the final dedup twice.
+    */
+  private def starEdges(wh: DataFrame, maxHamming: Int): DataFrame =
+    wh.filter(col("id") =!= col("hub") && col("hham") <= maxHamming)
+      .select(least(col("hub"), col("id")).as("ida"),
+        greatest(col("hub"), col("id")).as("idb"),
         col("hham").as("hamming"))
-      .dropDuplicates("ida", "idb")
-    // failed members re-enumerate against their whole bucket (hub
-    // included — that pair re-fails the verify, so no special case)
-    val patch = withHub
+
+  /** The CONNECTIVITY-CLOSED edges of a [[withHub]] frame, not
+    * deduplicated: the star, plus every verified pair touching a member
+    * that FAILED its hub verify (re-enumerated against all `members` of
+    * its bucket; the hub pair re-fails, so no special case). The only
+    * verified edges left out are passed−passed pairs, whose endpoints
+    * already connect through the hub — so per bucket the components
+    * equal those of the bucket's full verified graph, for any hub.
+    */
+  private def closedEdges(wh: DataFrame, members: DataFrame,
+                          maxHamming: Int): DataFrame = {
+    val patch = wh
       .filter(col("id") =!= col("hub") && col("hham") > maxHamming)
       .select(col("c"), col("v"), col("id").as("fa"),
         col("h1").as("fa1"), col("h2").as("fa2"))
-      .join(e.select(col("c"), col("v"), col("id").as("ob"),
+      .join(members.select(col("c"), col("v"), col("id").as("ob"),
         col("h1").as("ob1"), col("h2").as("ob2")), Seq("c", "v"))
       .filter(col("fa") =!= col("ob"))
       .select(least(col("fa"), col("ob")).as("ida"),
         greatest(col("fa"), col("ob")).as("idb"),
-        (bit_count(col("fa1").bitwiseXOR(col("ob1"))) +
-          bit_count(col("fa2").bitwiseXOR(col("ob2")))).as("hamming"))
+        hamming120("fa", "ob").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("ida", "idb")
-    // a pair can arrive via star in one bucket and patch in another;
-    // hamming is the same exact 120-bit value either way
-    star.unionByName(patch).dropDuplicates("ida", "idb")
+    starEdges(wh, maxHamming).unionByName(patch)
   }
 
-  /** PER-BUCKET ADAPTIVE simhash enumeration (round 16) — the dispatch
-    * that retires the route-as-env-var choice between
-    * [[simhashPairsWide]] (exact all-pairs, cheapest in the common case
-    * after verify-first, quadratic in ultra-hot tight buckets) and
-    * [[simhashStarPairsWideClosed]] (component-exact at star-shaped
-    * cost, ~2× all-pairs when hub-verify failures are common — measured
-    * 46% on the diversify fixtures, BASELINE.md round 15). The cost
-    * regimes are known per BUCKET, not per corpus, so the choice is made
+  /** The sketch pinned and filled once, so the consumers that follow
+    * read one tokenize+simhash pass (lazily, each side of the self-join
+    * re-hashed the corpus). The label is shared by every wide route.
+    */
+  private def pinnedSketch(docs: DataFrame, textCol: String, idCol: String,
+                           maxHamming: Int): DataFrame =
+    graft.operators.Artifacts.pinEager(
+      wideSketch(docs, textCol, idCol, maxHamming), "simhash.sketch")
+
+  /** ALL verified near-dup pairs: (ida, idb, hamming) with ida < idb and
+    * exact 120-bit Hamming ≤ `maxHamming` (0–3) — the exact pair set,
+    * the scale twin of [[simhashPairs]]. Each bucket enumerates
+    * n(n−1)/2 candidates, so a huge tight cluster costs quadratically in
+    * its size. Use it when the pair list is the product; for clustering
+    * use [[simhashPairsWideAdaptive]].
+    */
+  def simhashPairsWide(docs: DataFrame, textCol: String, idCol: String,
+                       maxHamming: Int = 3): DataFrame = {
+    val sh = pinnedSketch(docs, textCol, idCol, maxHamming)
+    bucketPairs(wideBuckets(sh), maxHamming).dropDuplicates("ida", "idb")
+  }
+
+  /** A SPANNING subset of [[simhashPairsWide]]: per bucket, every member
+    * that verifies against the bucket's MIN id pairs with it (a star:
+    * n−1 candidates instead of n(n−1)/2).
+    *
+    * Lossy on one side only: the star is a subgraph of the verified
+    * all-pairs graph, so components can split, never merge wrongly.
+    * Clusters whose members all sit within `maxHamming` of the bucket
+    * min (replica/template dups) connect identically; a Hamming chain
+    * a−b−c whose only passing links run through b loses a−c when b is
+    * never a bucket min (cleanCorpusBest kept 0.47% / 0.90% more docs at
+    * d100 / d300, BASELINE.md round 15). Use it only where linear
+    * candidates matter more than those links; for exact components use
+    * [[simhashPairsWideAdaptive]].
+    */
+  def simhashStarPairsWide(docs: DataFrame, textCol: String, idCol: String,
+                           maxHamming: Int = 3): DataFrame = {
+    val sh = pinnedSketch(docs, textCol, idCol, maxHamming)
+    val e = wideBuckets(sh)
+    starEdges(withHub(e, e.groupBy("c", "v").agg(min(col("id")).as("hub")),
+      sh), maxHamming).dropDuplicates("ida", "idb")
+  }
+
+  /** [[simhashStarPairsWide]]'s star PLUS every verified pair touching a
+    * member that fails its bucket-min hub verify — a subset of
+    * [[simhashPairsWide]] with IDENTICAL connected components: every
+    * true pair shares a bucket (pigeonhole), and per bucket the closed
+    * edges connect what the full verified graph connects (see
+    * [[closedEdges]]). DedupSpec pins a planted chain and a randomized
+    * components-equality property; q_dedup_clusters_simhash_closed
+    * checks it against DuckDB's all-pairs recursive closure.
+    *
+    * Cost per bucket: (n−1) star + |failed|·(n−1) patch candidates —
+    * linear while the hub represents its bucket, toward all-pairs in a
+    * bucket whose hub represents nobody. [[simhashPairsWideAdaptive]]
+    * bounds that case per bucket and is the one to use for clustering.
+    */
+  def simhashStarPairsWideClosed(docs: DataFrame, textCol: String,
+                                 idCol: String, maxHamming: Int = 3)
+      : DataFrame = {
+    val sh = pinnedSketch(docs, textCol, idCol, maxHamming)
+    val e = wideBuckets(sh)
+    closedEdges(withHub(e, e.groupBy("c", "v").agg(min(col("id")).as("hub")),
+      sh), e, maxHamming).dropDuplicates("ida", "idb")
+  }
+
+  /** PER-BUCKET ADAPTIVE near-dup pairs for clustering — the pipeline
+    * default (PipelineBench's near-dup stage and the curation benchmark
+    * call it). The choice between all-pairs and the closed star is made
     * per (chunk, value) bucket off its population `n`:
     *
-    *  - n ≤ `bucketBound`: enumerate ALL pairs (verify-first — the
-    *    n(n−1)/2 candidates are cheap map-side work at small n, and the
-    *    emitted subgraph is the full verified bucket graph);
-    *  - n > `bucketBound`: the CLOSED star (hub pairs + every verified
-    *    pair touching a hub-failed member), hardened twice over the
-    *    plain closed route (both measured on the planted template
-    *    fixture, BASELINE.md r16): the hub is the MODE-SIGNATURE member
-    *    (most frequent (h1,h2), min id within it — a low-id stranger
-    *    colliding into an exact-replica bucket can never capture it),
-    *    and a SECOND-LEVEL dispatch on the per-bucket hub-failure count
-    *    f (known before any patch is enumerated) reroutes majority-
-    *    failed buckets (f > n/2, where the patch's f·(n−1) would exceed
-    *    all-pairs' n(n−1)/2 — the 790 s vs 75 s degeneration) to
-    *    complete per-bucket enumeration. Per-bucket cost is bounded by
-    *    ~min(closed, all-pairs) for ANY hub quality; the linear win
-    *    holds whenever the hub represents its bucket.
+    *  - n ≤ `bucketBound`: all verified pairs of the bucket;
+    *  - n > `bucketBound`: the closed star around the bucket's
+    *    MODE-SIGNATURE member (most frequent (h1, h2), min id within it —
+    *    a low-id stranger colliding into a replica bucket cannot capture
+    *    the hub), unless more than half the members fail the hub verify
+    *    (f > n/2, where the patch's f·(n−1) would exceed n(n−1)/2): then
+    *    all verified pairs of the bucket. Per-bucket cost is ~min(closed,
+    *    all-pairs) for any hub.
     *
-    * CONTRACT — exact for clustering, adaptive in cost: per bucket the
-    * emitted edges are either the full verified graph or the closed
-    * subgraph, and the closed subgraph has identical connected
-    * components (the [[simhashStarPairsWideClosed]] theorem, per
-    * bucket); every true pair shares ≥ 1 bucket by the pigeonhole
-    * guarantee, so the UNION over buckets has identical components to
-    * the all-pairs graph for ANY bound — correctness never depends on
-    * where the bound sits, only cost does
-    * (q_dedup_clusters_simhash_adaptive hash-checks this cross-engine
-    * against the all-pairs recursive closure in DuckDB; DedupSpec pins
-    * the dispatch boundary: bound ↑ ∞ ≡ [[simhashPairsWide]] pair for
-    * pair; bound 0 is COMPONENT-equal to
-    * [[simhashStarPairsWideClosed]] — pair-level identity additionally
-    * holds whenever each bucket's mode-signature hub IS the bucket min
-    * (true on exact-replica buckets, and on the spec fixtures), but not
-    * in general, because the two routes pick different hubs; and
-    * mixed-bound components ≡ all-pairs with the pair set sandwiched
-    * closed-shaped ⊆ adaptive ⊆ all-pairs).
+    * CONTRACT — exact for clustering, adaptive in cost: every bucket
+    * emits its full verified graph or its closed edges, so the union has
+    * the connected components of [[simhashPairsWide]] for ANY bound; only
+    * cost depends on the bound. The pair set is sandwiched: closed-shaped
+    * ⊆ adaptive ⊆ all-pairs, and equals [[simhashPairsWide]] when no
+    * bucket exceeds the bound. Use [[simhashPairsWide]] when the pair list
+    * is the product. q_dedup_clusters_simhash_adaptive checks the
+    * components against DuckDB's all-pairs recursive closure.
     *
-    * GUARDS (round 17): the hot-bucket list is pinned and BROADCAST, so
-    * its driver-smallness is now ENFORCED, not assumed — the same
-    * histogram action that routes the no-hot-bucket fast path also
-    * counts over-bound buckets and fails loudly (IllegalArgumentException
-    * naming `bucketBound` as the knob) when more than `maxHotBuckets`
-    * buckets exceed the bound: that regime means the bound sits below
-    * the corpus's NORMAL bucket population, and the bound — not the
-    * join strategy — is what must move. The histogram itself is
-    * memoized per (pinned sketch, bound) via
-    * [[graft.operators.Artifacts.memo]], so repeated adaptive calls in
-    * one session (bench passes, incremental batches over an unchanged
-    * corpus) pay the decision action once — the r16-measured dispatch
-    * premium (d300: 7.84 s guarded vs 3.31 s plain enumeration) applies
-    * to the FIRST call only.
+    * GUARD: one bounded histogram action over the pinned sketch's buckets
+    * runs first and is memoized per (pinned sketch, bound) via
+    * [[graft.operators.Artifacts.memo]], so repeat calls in a session pay
+    * it once. With no bucket over the bound, the plain all-pairs plan
+    * runs with no dispatch joins. The hot-bucket list is pinned and
+    * broadcast, so the same action fails loudly
+    * (IllegalArgumentException naming `bucketBound`) when more than
+    * `maxHotBuckets` buckets exceed the bound: then the bound sits below
+    * the corpus's normal bucket population, and the bound must move. The
+    * action makes the operator construction-eager.
     *
-    * The PAIR SET itself is not all-pairs (above-bound buckets omit
-    * passed−passed edges already connected through their hub), so use
-    * [[simhashPairsWide]] when the pair list is the product; use this
-    * when feeding connected components — it is the pipeline default
-    * (PipelineBench route "adaptive").
-    *
-    * Default bound 1024: a 1024-member bucket is ~5·10⁵ all-pairs
-    * candidates — sub-second map-side verify work — while the 10⁴-copy
-    * template cluster the closed route exists for (planted and measured
-    * on the template fixture, BASELINE.md "Round-16 measurement: the
-    * adaptive per-bucket dispatch") is
-    * 5·10⁷ per bucket and dispatches closed.
-    *
-    * Dispatch overhead is itself guarded: one bounded histogram ACTION
-    * over the pinned sketch's chunk explode decides whether ANY bucket
-    * exceeds the bound — the common no-hot-bucket case then runs the
-    * plain verify-first all-pairs plan (bit-identical to
-    * [[simhashPairsWide]], zero extra shuffles), and only corpora that
-    * actually contain hot buckets pay the population join the mixed
-    * plan needs (measured 3.6× the stage at d100 when paid
-    * unconditionally — BASELINE.md round 16). Same probe-then-reroute
-    * posture as [[editDistancePairs]]' maxBandPop guard; the action
-    * makes the operator construction-eager, which the bench classifies
-    * and times accordingly.
+    * Default bound 1024: a 1024-member bucket is ~5·10⁵ candidates of
+    * map-side verify work, while a 10⁴-copy template cluster (5·10⁷ per
+    * bucket) dispatches closed (BASELINE.md "Round-16 measurement: the
+    * adaptive per-bucket dispatch").
     */
   def simhashPairsWideAdaptive(docs: DataFrame, textCol: String,
                                idCol: String, maxHamming: Int = 3,
                                bucketBound: Int = 1024,
                                maxHotBuckets: Long = 65536L): DataFrame = {
-    val mask30 = (1L << 30) - 1
-    // LAZY pin (round 18, VERDICT r17 #3): the guard histogram below is
-    // ALWAYS the first action over this frame (the memo runs before any
-    // branch is built), so the histogram job doubles as the cache fill —
-    // the sketch builds once, INSIDE the decision action, instead of a
-    // separate pinEager count() job paying the sketch build purely to
-    // warm the cache the histogram then re-scans. This is the first-call
-    // decision premium the r17 verdict measured at d1000 (23.97 s
-    // adaptive first call vs 13.43 s plain all-pairs): one of the two
-    // extra jobs was the eager count. The no-race contract pinEager
-    // exists for still holds — sequencing is by construction here
-    // (histogram action → require → branches), not by racing consumers.
-    // On a memo HIT the cache is already filled (the hit implies the
-    // same canonical sketch plan was pinned and measured this session;
-    // releaseAll clears memos with the pins, so hit ⇒ pin survived).
+    // LAZY pin: the guard histogram is always the first action over the
+    // sketch, so it fills the cache; an eager pin would build the sketch
+    // in a count() job only for the histogram to scan it again. A memo
+    // hit implies the same sketch plan was pinned and measured in this
+    // session (releaseAll clears memos with the pins).
     val sh = graft.operators.Artifacts.pin(
-      docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-        .filter(size(col("toks")) > 0)
-        .select(col("id"), simhash60(col("toks")).as("h1"),
-          simhash60Tail(col("toks")).as("h2")),
-      "simhash.sketch") // same sketch artifact as the sibling routes
-    val chunks = array(
-      col("h1").bitwiseAND(lit(mask30)),
-      shiftright(col("h1"), 30).bitwiseAND(lit(mask30)),
-      col("h2").bitwiseAND(lit(mask30)),
-      shiftright(col("h2"), 30).bitwiseAND(lit(mask30)))
-    val e = sh.select(col("id"), col("h1"), col("h2"),
-      posexplode(chunks).as(Seq("c", "v")))
-    // THE DISPATCH IS ITSELF GUARDED (round 16, measured): the mixed
-    // plan's population join re-shuffles the exploded sketch against
-    // the bucket aggregate, which cost 3.6× the plain all-pairs stage
-    // at d100 — where the hottest bucket was 242 and the closed branch
-    // would never fire. One bounded histogram ACTION (map-side partial
-    // over the pinned sketch's explode, a 1-row pair back) decides up
-    // front: no bucket over the bound ⇒ the plain verify-first
-    // all-pairs plan, zero dispatch overhead — the same probe-then-
-    // reroute posture as editDistancePairs' maxBandPop guard. Only
-    // corpora that genuinely contain hot buckets pay the pops join.
-    //
-    // The action is MEMOIZED per (pinned sketch plan, bound) — round 17:
-    // the histogram is a pure function of the pinned `simhash.sketch`
-    // artifact, yet every adaptive call re-paid the explode + bucket
-    // aggregate (the measured decision premium: d300 enumeration 7.84 s
-    // guarded vs 3.31 s plain, BASELINE.md r16). Repeat calls in one
-    // session — bench passes, incremental pipeline batches over an
-    // unchanged corpus — now pay it once; the memo dies with the pin
-    // (Artifacts.releaseAll), so a re-pinned sketch re-measures.
-    //
-    // The same action also counts OVER-BOUND buckets, closing the
-    // round-16 "driver-small by definition" hole: the hot list is
-    // pinned AND BROADCAST into the routing joins, so a corpus whose
-    // NORMAL bucket population exceeds `bucketBound` would broadcast an
-    // unbounded frame and die opaquely in the broadcast exchange. The
-    // guard fails LOUDLY first, naming the knob.
+      wideSketch(docs, textCol, idCol, maxHamming), "simhash.sketch")
+    val e = wideBuckets(sh)
     val (hottest, hotBuckets) =
       graft.operators.Artifacts.memo(sh, s"adaptive.hist.b=$bucketBound") {
         val r = e.groupBy("c", "v").agg(count(lit(1)).as("n"))
@@ -1701,168 +1571,43 @@ object Dedup extends org.apache.spark.internal.Logging {
         "bucketBound above the typical bucket size (hottest bucket seen: " +
         s"$hottest), or raise maxHotBuckets if a broadcast of that many " +
         "(chunk, value, n, hub) rows is genuinely affordable.")
-    if (hottest <= bucketBound) {
-      return e.select(col("id").as("ida"), col("h1").as("ha1"),
-          col("h2").as("ha2"), col("c"), col("v"))
-        .join(e.select(col("id").as("idb"), col("h1").as("hb1"),
-            col("h2").as("hb2"), col("c").as("cb"), col("v").as("vb")),
-          col("c") === col("cb") && col("v") === col("vb") &&
-            col("ida") < col("idb"))
-        .withColumn("hamming",
-          bit_count(col("ha1").bitwiseXOR(col("hb1"))) +
-            bit_count(col("ha2").bitwiseXOR(col("hb2"))))
-        .filter(col("hamming") <= maxHamming)
+    if (hottest <= bucketBound)
+      bucketPairs(e, maxHamming).dropDuplicates("ida", "idb")
+    else {
+      // The hot list (c, v, n, hub): over-bound buckets only, pinned
+      // because the anti-join and the hub join both read it, and
+      // broadcast into both — the guard above keeps it driver-small.
+      // hub = min_by over (−count, id); only the count is negated, so a
+      // STRING id survives, and (−sc, sid) keys are distinct in a bucket.
+      val sigc = e.groupBy("c", "v", "h1", "h2")
+        .agg(count(lit(1)).as("sc"), min(col("id")).as("sid"))
+      val hot = graft.operators.Artifacts.pinEager(
+        sigc.groupBy("c", "v")
+          .agg(sum(col("sc")).as("n"),
+            min_by(col("sid"),
+              struct((-col("sc")).as("nsc"), col("sid").as("tid")))
+              .as("hub"))
+          .filter(col("n") > bucketBound),
+        "simhash.adaptive.hot")
+      val small = bucketPairs(
+        e.join(broadcast(hot.select("c", "v")), Seq("c", "v"), "left_anti"),
+        maxHamming)
+      // f = hub-verify failures per hot bucket, known before any patch
+      // is enumerated; pinned because the three branches below read it
+      val wh = withHub(e, broadcast(hot), sh)
+      val fails = wh
+        .filter(col("id") =!= col("hub") && col("hham") > maxHamming)
+        .groupBy("c", "v").agg(count(lit(1)).as("f"))
+      val wf = graft.operators.Artifacts.pinEager(
+        wh.join(fails, Seq("c", "v"), "left").na.fill(0L, Seq("f")),
+        "simhash.adaptive.wf")
+      val closedSide = wf.filter(col("f") * 2 <= col("n"))
+      small
+        .unionByName(closedEdges(closedSide, closedSide, maxHamming))
+        .unionByName(bucketPairs(wf.filter(col("f") * 2 > col("n")),
+          maxHamming))
         .dropDuplicates("ida", "idb")
-        .select("ida", "idb", "hamming")
     }
-    // the dispatch input: the HOT-BUCKET LIST — (c, v, n, hub) for
-    // buckets over the bound only, which is RARE BY DEFINITION (hot
-    // buckets are the exception the dispatch exists for). Carrying the
-    // population onto every exploded row via an e ⋈ pops join was the
-    // first cut; it shuffled the full explode once for the join and
-    // then RE-EVALUATED that chain in every branch that referenced it
-    // (the small self-join twice, the big-branch chain four more
-    // times) — measured 557 s vs 157 s plain all-pairs on the template
-    // fixture. Dispatching against the tiny hot list instead keeps
-    // per-row routing a hash anti/semi join (AQE broadcasts it at
-    // runtime) and re-evaluating `e` per branch costs only the pinned
-    // sketch scan + explode.
-    //
-    // The hub is the member carrying the bucket's MODE SIGNATURE (most
-    // frequent (h1,h2), min id within it) — NOT the bucket min id.
-    // Measured reason (same fixture): one low-id STRANGER
-    // chunk-colliding into a hot bucket captures a min-id hub, every
-    // real member fails its verify, and the patch degenerates to 2×
-    // all-pairs (406M candidates). The mode signature is the template
-    // itself in exactly the exact-replica regime the closed branch
-    // exists for, so capture is impossible there; hub choice never
-    // affects exactness (the closure argument is hub-independent), only
-    // the patch volume.
-    // The hot list is PINNED (one computation — it is referenced by the
-    // small anti-join and the big semi-join, and a lazy plan re-ran its
-    // two aggregates over the full explode once per consumer: measured
-    // 327 s vs 22.6 s all-pairs at d1000 before the pin/broadcast) and
-    // BROADCAST into the routing joins. The broadcast is an ENFORCED
-    // contract (round 17): hot buckets are the exception the dispatch
-    // exists for, so the list is driver-small by construction — and the
-    // guard histogram above has already required the over-bound bucket
-    // count under `maxHotBuckets`, failing loudly before this frame is
-    // built when a corpus's NORMAL bucket population sits above the
-    // bound (the regime where the bound, not the join strategy, is what
-    // must move).
-    // hub = min_by over (−count, id): max signature count, min id within
-    // it. The id is never arithmetically transformed — the first cut
-    // negated it (max(struct(sc, −sid))), which silently nulls the hub
-    // for a STRING idCol under non-ANSI implicit casts and the
-    // withHub join then drops every hot-bucket member; only the count
-    // (always a long) is negated. Ties cannot arise: an id belongs to
-    // exactly one (h1,h2) signature per bucket, so (−sc, sid) keys are
-    // distinct within a bucket.
-    val sigc = e.groupBy("c", "v", "h1", "h2")
-      .agg(count(lit(1)).as("sc"), min(col("id")).as("sid"))
-    val hot = graft.operators.Artifacts.pinEager(
-      sigc.groupBy("c", "v")
-        .agg(sum(col("sc")).as("n"),
-          min_by(col("sid"),
-            struct((-col("sc")).as("nsc"), col("sid").as("tid"))).as("hub"))
-        .filter(col("n") > bucketBound),
-      "simhash.adaptive.hot")
-    // below-bound buckets: verify-first all-pairs, simhashPairsWide's
-    // exact shape restricted to non-hot buckets (anti-join against the
-    // hot list — no population column needed on the small side)
-    val smallE = e.join(broadcast(hot.select("c", "v")),
-      Seq("c", "v"), "left_anti")
-    val smallPairs = smallE
-      .select(col("c"), col("v"), col("id").as("ida"),
-        col("h1").as("ha1"), col("h2").as("ha2"))
-      .join(smallE.select(col("c").as("cb"), col("v").as("vb"),
-          col("id").as("idb"), col("h1").as("hb1"), col("h2").as("hb2")),
-        col("c") === col("cb") && col("v") === col("vb") &&
-          col("ida") < col("idb"))
-      .withColumn("hamming",
-        bit_count(col("ha1").bitwiseXOR(col("hb1"))) +
-          bit_count(col("ha2").bitwiseXOR(col("hb2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("ida", "idb", "hamming")
-    // above-bound buckets: the closed star, SECOND-LEVEL dispatched
-    // (round 16, measured on the planted template fixture). The closed
-    // patch costs |failed|·(n−1) per bucket, which DEGENERATES when the
-    // hub fails for a majority — the 10⁴-near-copy template bucket with
-    // a captured hub hit 400M patch candidates / 790 s where plain
-    // all-pairs was 75 s. But |failed| is known per bucket BEFORE any
-    // patch is enumerated (it is a count over the already-joined hub
-    // verdicts), so the branch dispatches again: f ≤ n/2 → star+patch
-    // (linear when the hub represents — exact-replica buckets, low-
-    // drift clusters); f > n/2 → per-bucket ALL-PAIRS (complete, cost
-    // n(n−1)/2 — which is ≤ the patch's f·(n−1) there by the dispatch
-    // inequality). Per-bucket cost is therefore ≤ ~min(closed,
-    // all-pairs) ALWAYS; no hub-quality pathology can exceed the
-    // all-pairs baseline by more than the bounded probe/count passes.
-    val big = e.join(broadcast(hot), Seq("c", "v"))
-    val withHub = big
-      .join(sh.select(col("id").as("hub"), col("h1").as("hh1"),
-        col("h2").as("hh2")), "hub")
-      .withColumn("hham",
-        bit_count(col("h1").bitwiseXOR(col("hh1"))) +
-          bit_count(col("h2").bitwiseXOR(col("hh2"))))
-    val fails = withHub
-      .filter(col("id") =!= col("hub") && col("hham") > maxHamming)
-      .groupBy("c", "v").agg(count(lit(1)).as("f"))
-    // pinned for the same reason as the hot list: star/patch/quad
-    // reference this frame five times between them, and its chain holds
-    // two shuffles; it only ever holds hot-bucket MEMBERS, so the pin
-    // is bounded by the same exceptionality contract
-    val wf = graft.operators.Artifacts.pinEager(
-      withHub.join(fails, Seq("c", "v"), "left")
-        .na.fill(0L, Seq("f")),
-      "simhash.adaptive.wf")
-    val closedSide = wf.filter(col("f") * 2 <= col("n"))
-    // least/greatest, NOT (hub, id): the mode-signature hub is the min
-    // id within its SIGNATURE, not the bucket min, so a passing member
-    // with a lower id than the hub would otherwise emit ida > idb — and
-    // the same undirected pair arriving ordered from another bucket's
-    // small/quad branch would survive the final dropDuplicates as a
-    // duplicate, breaking the ida < idb invariant every sibling route
-    // guarantees (hham is symmetric, so the value is unaffected).
-    val star = closedSide
-      .filter(col("id") =!= col("hub") && col("hham") <= maxHamming)
-      .select(least(col("hub"), col("id")).as("ida"),
-        greatest(col("hub"), col("id")).as("idb"),
-        col("hham").as("hamming"))
-    val patch = closedSide
-      .filter(col("id") =!= col("hub") && col("hham") > maxHamming)
-      .select(col("c"), col("v"), col("id").as("fa"),
-        col("h1").as("fa1"), col("h2").as("fa2"))
-      .join(closedSide.select(col("c"), col("v"), col("id").as("ob"),
-        col("h1").as("ob1"), col("h2").as("ob2")), Seq("c", "v"))
-      .filter(col("fa") =!= col("ob"))
-      .select(least(col("fa"), col("ob")).as("ida"),
-        greatest(col("fa"), col("ob")).as("idb"),
-        (bit_count(col("fa1").bitwiseXOR(col("ob1"))) +
-          bit_count(col("fa2").bitwiseXOR(col("ob2")))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    // majority-failed buckets: complete per-bucket enumeration — the
-    // same verify-first all-pairs shape, restricted to these buckets
-    val quad = wf.filter(col("f") * 2 > col("n"))
-    val quadPairs = quad
-      .select(col("c"), col("v"), col("id").as("ida"),
-        col("h1").as("ha1"), col("h2").as("ha2"))
-      .join(quad.select(col("c").as("cb"), col("v").as("vb"),
-          col("id").as("idb"), col("h1").as("hb1"), col("h2").as("hb2")),
-        col("c") === col("cb") && col("v") === col("vb") &&
-          col("ida") < col("idb"))
-      .withColumn("hamming",
-        bit_count(col("ha1").bitwiseXOR(col("hb1"))) +
-          bit_count(col("ha2").bitwiseXOR(col("hb2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("ida", "idb", "hamming")
-    // one pair-dedup shuffle over the union (a pair can arrive from a
-    // small bucket, a big bucket's star/patch, and a rerouted quad
-    // bucket — hamming is the same exact 120-bit value on every route;
-    // per-bucket the emitted subgraph is complete (small/quad) or
-    // connectivity-closed (star+patch), so components equal all-pairs)
-    smallPairs.unionByName(star).unionByName(patch).unionByName(quadPairs)
-      .dropDuplicates("ida", "idb")
   }
 
   /** Fuzzy-duplicate pairs under a Levenshtein edit-distance threshold —

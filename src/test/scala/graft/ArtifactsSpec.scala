@@ -80,7 +80,7 @@ class ArtifactsSpec extends SparkSpecBase {
       "cache entry must be gone even though the Dataset handle was collected")
   }
 
-  test("memo entries are capped per session, oldest evicted first, and an " +
+  test("memo entries are capped in total, oldest evicted first, and an " +
     "evicted key recomputes (ADVICE r17: plan keys hold driver rows)") {
     Artifacts.releaseAll(spark)
     val df = Seq(1, 2, 3).toDF("x")

@@ -127,6 +127,25 @@ class DedupSpec extends SparkSpecBase {
       "unrelated doc paired by the wide signature")
   }
 
+  test("every simhash pair route rejects maxHamming 4: four chunks " +
+    "guarantee a shared bucket only up to distance 3") {
+    val routes: Seq[(String, Int => DataFrame)] = Seq(
+      "simhashPairs" -> (Dedup.simhashPairs(docs, "body", "doc_id", _: Int)),
+      "simhashPairsWide" ->
+        (Dedup.simhashPairsWide(docs, "body", "doc_id", _: Int)),
+      "simhashStarPairsWide" ->
+        (Dedup.simhashStarPairsWide(docs, "body", "doc_id", _: Int)),
+      "simhashStarPairsWideClosed" ->
+        (Dedup.simhashStarPairsWideClosed(docs, "body", "doc_id", _: Int)),
+      "simhashPairsWideAdaptive" ->
+        (Dedup.simhashPairsWideAdaptive(docs, "body", "doc_id", _: Int)))
+    for ((name, route) <- routes) {
+      val ex = intercept[IllegalArgumentException](route(4))
+      assert(ex.getMessage.contains("maxHamming 4"),
+        s"$name: the error must name the bound: ${ex.getMessage}")
+    }
+  }
+
   test("simhashStarPairsWide: subset of all-pairs; tight clusters get " +
     "identical components; verify values match the all-pairs route") {
     // a planted 4-copy cluster (identical bodies → hamming 0 throughout)
