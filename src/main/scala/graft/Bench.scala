@@ -120,6 +120,15 @@ package graft
   * target/bench_history.jsonl (override: SPARK_GRAFT_BENCH_HISTORY).
   * Both default under the git-ignored target/, so a run never rewrites
   * the committed snapshots in the repository root.
+  *
+  * Codegen attribution: "compiles" maps each query to the Janino
+  * compilations (spark-core's JVM-wide CodegenMetrics counter) its run
+  * in the attributed pass ("shuffle_pass") made, and "warmup_compiles"
+  * is the counter after the untimed build and warm-up, i.e. every class
+  * the suite needs once. With the generated-class cache sized to the
+  * suite (GraftSession.CodegenCacheEntries), a timed pass re-uses the
+  * warm-up's classes and "compiles" reads ~0; a query that still
+  * compiles in a timed pass shows up here.
   */
 object Bench {
   val timedPasses = 4
@@ -170,6 +179,12 @@ object Bench {
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
   }
+
+  /** Janino compilations so far in this JVM (driver and local-mode
+    * executors share the counter).
+    */
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** 1-minute load average from /proc/loadavg; -1 where unreadable
     * (non-Linux), so the artifact still parses.
@@ -290,6 +305,8 @@ object Bench {
 
     // warm-up, untimed
     built.foreach { case (name, dfOpt, _, _, _) => dfOpt.foreach(exec(name, _)) }
+    val warmupCompiles = compileCount
+    System.err.println(s"BENCH: build + warm-up compiled $warmupCompiles classes")
 
     val bytes = new BytesListener
     spark.sparkContext.addSparkListener(bytes)
@@ -314,14 +331,20 @@ object Bench {
     // shuffle bytes came from the very sweep the policy deems
     // untrustworthy; the ADVICE r16 low). The reported map is read off
     // the last NON-discarded pass after the discard decision below.
+    // compiles((pass, name)) = the query's Janino compilations in that
+    // pass, reported off the same pass as the shuffle bytes
+    val compiles = scala.collection.mutable.Map.empty[(Int, String), Long]
     val passes: Seq[Seq[(String, Double, Boolean)]] =
       (1 to timedPasses).map { pass =>
         timedSweep(pass.toString) {
           built.map { case (name, dfOpt, eager, _, _) =>
             spark.sparkContext.setJobGroup(s"p$pass:$name", name)
+            val c0 = compileCount
             val t0 = System.nanoTime()
             val ok = runOnce(name, dfOpt, eager)
-            (name, (System.nanoTime() - t0) / 1e9, ok)
+            val sec = (System.nanoTime() - t0) / 1e9
+            compiles((pass, name)) = compileCount - c0
+            (name, sec, ok)
           }
         }
       }
@@ -448,6 +471,9 @@ object Bench {
     // makes a 1-9-job borderline construction auditable from the JSON
     val buildJobsJson = buildJobCounts
       .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
+    val compilesJson = ordered.map { case (k, _) =>
+      "\"" + k + "\":" + compiles.getOrElse((attribPass, k), 0L)
+    }.mkString("{", ",", "}")
     val buildSecsJson = buildSecs
       .map { case (k, s) => "\"" + k + "\":" + s }.mkString("{", ",", "}")
     val histFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY",
@@ -511,7 +537,7 @@ object Bench {
     // summary) so bench_history.jsonl lines are self-describing — cross-
     // round trend mining must not need the BENCH_r0N snapshot files
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","bench_rev":$benchRev,"n_queries":${byName.size},"n_failed":${byName.count(!_._3)},"failed":$failed,"pass_env":$envJson,"discarded_pass":$discardedJson,"shuffle_pass":$attribPass,"outlier_reruns":$rerunsJson,"eager_rebuilt":$eagerJson,"build_jobs":$buildJobsJson,"build_seconds":$buildSecsJson,"escape_audit":$escapeAudit,"passes":$allPasses,"shuffle_mb":${mb(shuffleByName)},"sf":"$sfDir","queries":$qs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","bench_rev":$benchRev,"n_queries":${byName.size},"n_failed":${byName.count(!_._3)},"failed":$failed,"pass_env":$envJson,"discarded_pass":$discardedJson,"shuffle_pass":$attribPass,"outlier_reruns":$rerunsJson,"eager_rebuilt":$eagerJson,"build_jobs":$buildJobsJson,"build_seconds":$buildSecsJson,"escape_audit":$escapeAudit,"passes":$allPasses,"shuffle_mb":${mb(shuffleByName)},"compiles":$compilesJson,"warmup_compiles":$warmupCompiles,"sf":"$sfDir","queries":$qs}"""
     println(line)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_last.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")

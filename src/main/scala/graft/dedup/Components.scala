@@ -400,18 +400,24 @@ object Components {
     * equi-join back against the undirected pair list. All shuffles are
     * hash-partitioned on node/pair keys; nothing is ever quadratic in a
     * hub's degree.
+    *
+    * Session contract: the returned frame is bound to the AQE-off narrow
+    * session (`NarrowExec.narrowed`), not to the caller's session, and
+    * stays there: whatever the caller composes on it, and its final
+    * action, plan and execute narrow, with `numPartitions` shuffle
+    * partitions. Unlike the round loops this operator is one lazy plan,
+    * so rebinding to the caller would re-plan it under the caller's AQE
+    * confs. Narrow pays here: the wedge plan is 6 exchanges = 13 AQE
+    * stage jobs over the oriented edge stream (OPTIMIZATION_r19.md §4:
+    * ~1.0 s of the query's ~2.8 s at sf0.1), all id-keyed and
+    * partitioning-independent.
+    *
+    * `numPartitions` defaults to the constant 8; callers should pass the
+    * measured edge width (the GraphMart.EdgeRowsPerPartition rule, as
+    * q_graph_triangles does).
     */
   def triangleCounts(pairs: DataFrame,
                      numPartitions: Int = 8): DataFrame = {
-    // Unlike the round loops this operator is one LAZY plan, so the
-    // narrow regime only applies if the returned frame STAYS on the
-    // narrow session (rebinding to the caller would re-plan under its
-    // AQE confs) — the caller's composition and final action execute
-    // narrow. Worth it here: the wedge plan is 6 exchanges = 13 AQE
-    // stage jobs over the oriented edge stream (OPTIMIZATION_r19.md §4:
-    // ~1.0 s of the query's ~2.8 s at sf0.1), all id-keyed and
-    // partitioning-independent; `numPartitions` should be the measured
-    // edge width (GraphMart.EdgeRowsPerPartition rule).
     val p = narrowed(pairs.select(col("ida"), col("idb")), numPartitions)
     val deg = p.select(col("ida").as("id"))
       .unionAll(p.select(col("idb").as("id")))

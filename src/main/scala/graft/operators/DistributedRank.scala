@@ -100,15 +100,15 @@ object DistributedRank {
     // whole frame on every execution — OPTIMIZATION_r19.md §2: the
     // readout was 9 jobs / ~2.5 s, larger than the positioned
     // build itself). The group minimum rides the SAME bounded
-    // per-(partition, key) aggregate the offsets already collect.
-    // Contract note: the 33-bit index bounds a partition at ~8.6e9
-    // rows — orders of magnitude past the 100 MB-1 GB partition sizing.
+    // per-(partition, key) aggregate the offsets already collect, and
+    // `checkIndexTiling` verifies on those rows that the groups tile
+    // each partition's index range and that the range fits 33 bits.
     val sorted = df
       .repartitionByRange(p, rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__idx",
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
+        monotonically_increasing_id().bitwiseAND(lit(IndexLimit - 1)))
       .localCheckpoint(true)
     // Bounded by contract: numPartitions × |distinct keys| rows.
     val cnts = sorted.groupBy(col("__pid"), col(keyCol))
@@ -118,6 +118,7 @@ object DistributedRank {
       .collect()
       .map(r => (r.getInt(0), r.get(1), r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) 0L else r.getLong(4)))
+    checkIndexTiling(cnts.toSeq.map { case (pid, _, c, st, _) => (pid, st, c) })
     val byKey = cnts.groupBy(_._2)
     val offRows = cnts.map { case (pid, k, _, st, _) =>
       val before = byKey(k).filter(_._1 < pid)
@@ -156,6 +157,33 @@ object DistributedRank {
       .join(broadcast(totDf), Seq(keyCol))
       .drop("__pid", "__idx", "__off", "__soff", "__st")
   }
+
+  /** Index bound: `__idx` keeps 33 bits, so a partition holds < 2^33 rows. */
+  private[graft] val IndexLimit: Long = 1L << 33
+
+  /** The invariants `pos = __off + (__idx − __st) + 1` rests on, checked
+    * on the bounded per-(partition, key) rows `(pid, st, c)`: within each
+    * partition the key groups, sorted by `st`, start at index 0 and tile
+    * it without gap or overlap (each group is one consecutive run of the
+    * sorted partition), and the last run ends below [[IndexLimit]] (a
+    * longer partition would wrap `__idx` back to 0).
+    * Throws `IllegalStateException` naming the partition otherwise.
+    */
+  private[graft] def checkIndexTiling(groups: Seq[(Int, Long, Long)]): Unit =
+    groups.groupBy(_._1).foreach { case (pid, runs) =>
+      val end = runs.sortBy(_._2).foldLeft(0L) { case (next, (_, st, c)) =>
+        if (st != next)
+          throw new IllegalStateException(
+            s"DistributedRank: partition $pid has a key run starting at " +
+              s"index $st where $next was expected; key groups must tile " +
+              "the sorted partition contiguously from 0")
+        st + c
+      }
+      if (end >= IndexLimit)
+        throw new IllegalStateException(
+          s"DistributedRank: partition $pid holds $end rows, past the " +
+            s"33-bit index bound ($IndexLimit); raise numPartitions")
+    }
 
   /** [[withPositions]] over the WHOLE frame (no partition key): exact
     * global positions — and with `sumCol`, the exact global running

@@ -134,4 +134,24 @@ class DistributedRankSpec extends SparkSpecBase {
         Seq((1L, "a", 2L)).toDF("id", "k", "N"), "k", Seq(col("id")))
     }
   }
+
+  test("index tiling check rejects a gapped run and a partition past 2^33") {
+    // (pid, st, c): partition 0 tiles 0..5 with two keys, partition 1
+    // with one — the shape withPositions collects
+    DistributedRank.checkIndexTiling(Seq((0, 0L, 2L), (0, 2L, 4L), (1, 0L, 3L)))
+    val gap = intercept[IllegalStateException] {
+      DistributedRank.checkIndexTiling(Seq((0, 0L, 2L), (3, 0L, 2L), (3, 3L, 1L)))
+    }
+    assert(gap.getMessage.contains("partition 3"), gap.getMessage)
+    val late = intercept[IllegalStateException] {
+      DistributedRank.checkIndexTiling(Seq((2, 1L, 4L)))
+    }
+    assert(late.getMessage.contains("partition 2"), late.getMessage)
+    val wide = intercept[IllegalStateException] {
+      DistributedRank.checkIndexTiling(
+        Seq((5, 0L, DistributedRank.IndexLimit - 1), (5, DistributedRank.IndexLimit - 1, 1L)))
+    }
+    assert(wide.getMessage.contains("partition 5") &&
+      wide.getMessage.contains("33-bit"), wide.getMessage)
+  }
 }
