@@ -44,7 +44,7 @@ package graft
   *    classification is MEASURED, not a hand-kept list, and errs
   *    eager (over-measuring is honest; under-measuring is not):
   *    a construction is eager iff (a) a Dataset action fired during it
-  *    (QueryExecutionListener — count/collect/checkpoint/save; parquet
+  *    (Trace's `actions` — count/collect/checkpoint/save; parquet
   *    footer-inference jobs do NOT fire it, which is what disqualified
   *    the raw job count: EVERY spark.read.parquet runs one 1-task
   *    schema job), or (b) its optimized plan contains LogicalRDD /
@@ -102,13 +102,9 @@ package graft
   * failed. The per-query outlier+rerun machinery runs unchanged on
   * the remaining samples.
   *
-  * Shuffle_mb attribution (round 17): every ordinary pass tags its jobs
-  * with a "p<pass>:<query>" group, so per-pass byte maps all exist; the
-  * reported map is read off the LAST NON-DISCARDED pass ("shuffle_pass"
-  * names it) — previously only the final pass was attributed, so when
-  * rev 5 discarded that pass the bytes came from the one sweep the
-  * policy distrusts (ADVICE r16). Rerun executions run with the job
-  * group CLEARED so rerun bytes never pollute any pass's map.
+  * Every query's construction and every ordinary-pass run is one
+  * [[Trace.measure]] window, and "shuffle_mb" and "compiles" are read off
+  * the last pass the discard kept ("shuffle_pass").
   * "build_seconds" (round 17) records each query's construction wall
   * from the untimed build phase (≥ 10 ms only): for eager_rebuilt
   * queries that construction is re-paid inside every timed pass, so
@@ -122,8 +118,7 @@ package graft
   * the committed snapshots in the repository root.
   *
   * Codegen attribution: "compiles" maps each query to the Janino
-  * compilations (spark-core's JVM-wide CodegenMetrics counter) its run
-  * in the attributed pass ("shuffle_pass") made, and "warmup_compiles"
+  * compilations its run in the attributed pass made, and "warmup_compiles"
   * is the counter after the untimed build and warm-up, i.e. every class
   * the suite needs once. With the generated-class cache sized to the
   * suite (GraftSession.CodegenCacheEntries), a timed pass re-uses the
@@ -138,53 +133,6 @@ object Bench {
   val OutlierFloorS = 0.5
   /** Extra executions granted to a query with outlier passes. */
   val MaxReruns = 2
-
-  /** Sums task shuffle-write bytes per query name. Listener events are
-    * delivered ASYNCHRONOUSLY (AsyncEventQueue dispatch thread), so a
-    * query's tail events can arrive after the driver moved on — a
-    * volatile current-name read at delivery time would misattribute
-    * them. Attribution therefore binds at SUBMISSION time: onJobStart
-    * records stage → query from the job-group property (set by the
-    * driver before each run, captured in the event itself), and
-    * onTaskEnd looks its stage up — late delivery no longer matters.
-    * The driver drains the bus (GraftSqlBridge.drainListenerBus) before
-    * reading the map so the final query's tail is counted too.
-    */
-  private final class BytesListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private val stageToQuery =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val shuffle = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val group = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      if (group.nonEmpty)
-        j.stageIds.foreach(sid => stageToQuery.put(sid, group))
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val name = stageToQuery.get(t.stageId)
-      if (name != null && t.taskMetrics != null)
-        shuffle.merge(name, t.taskMetrics.shuffleWriteMetrics.bytesWritten,
-          (a, b) => a + b)
-    }
-  }
-
-  /** Cumulative JVM GC milliseconds across all collectors (monotonic —
-    * deltas across a pass are the pass's GC time).
-    */
-  private def gcMs: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-  }
-
-  /** Janino compilations so far in this JVM (driver and local-mode
-    * executors share the counter).
-    */
-  private def compileCount: Long =
-    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** 1-minute load average from /proc/loadavg; -1 where unreadable
     * (non-Linux), so the artifact still parses.
@@ -208,32 +156,13 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
 
-    // Rev-4 instrumented build phase: construct each frame once, with a
-    // job counter deciding reuse eligibility (see header). The listener
-    // bus is drained after each construction so async job-start events
-    // can't misclassify the NEXT query. Construction failures surface
-    // in "failed" exactly like execution failures.
-    val buildJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val buildListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        buildJobs.incrementAndGet(); ()
-      }
-    }
-    val buildActions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { buildActions.incrementAndGet(); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = { buildActions.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(buildListener)
-    spark.listenerManager.register(qeListener)
-    // (name, reusable frame or None, constructionEager)
-    // built += per-query raw-job delta (the ≥10 safety net's input):
-    // committed to the artifact as "build_jobs" so a borderline
+    // Rev-4 instrumented build phase: construct each frame once, in its
+    // own Trace window, whose jobs and actions decide reuse eligibility
+    // (see header). Construction failures surface in "failed" exactly
+    // like execution failures.
+    // (name, reusable frame or None, constructionEager, rawJobs, buildSec)
+    // rawJobs = the construction's raw-job count (the ≥10 safety net's
+    // input): committed to the artifact as "build_jobs" so a borderline
     // classification — 1-9 raw jobs with no Dataset action and no
     // materialized plan node — is AUDITABLE from the JSON rather than
     // invisible (judge advice r14: the net's blind spot needs a record,
@@ -248,29 +177,25 @@ object Bench {
     // effects make it an upper bound on the per-pass re-pay.
     val built: Seq[(String, Option[org.apache.spark.sql.DataFrame], Boolean, Int, Double)] =
       ordered.map { case (name, fn) =>
-        org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
-        val (jobs0, acts0) = (buildJobs.get(), buildActions.get())
-        val t0 = System.nanoTime()
-        val dfOpt =
-          try Some(fn(spark, sfDir))
-          catch {
-            case t: Throwable =>
-              System.err.println(
-                s"BENCH BUILD FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
-              None
-          }
-        val buildSec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
+        val ((dfOpt, buildSec), c) = Trace.measure(spark) {
+          val t0 = System.nanoTime()
+          val dfOpt =
+            try Some(fn(spark, sfDir))
+            catch {
+              case t: Throwable =>
+                System.err.println(
+                  s"BENCH BUILD FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
+                None
+            }
+          (dfOpt, (System.nanoTime() - t0) / 1e9)
+        }
         val planEager = dfOpt.exists { df =>
           val p = df.queryExecution.optimizedPlan.toString
           p.contains("LogicalRDD") || p.contains("InMemoryRelation")
         }
-        val rawJobs = buildJobs.get() - jobs0
-        val eager = planEager || buildActions.get() > acts0 || rawJobs >= 10
-        (name, dfOpt, eager, rawJobs, buildSec)
+        val eager = planEager || c.actions > 0 || c.jobs >= 10
+        (name, dfOpt, eager, c.jobs, buildSec)
       }
-    spark.sparkContext.removeSparkListener(buildListener)
-    spark.listenerManager.unregister(qeListener)
     val eagerNames = built.collect { case (n, _, true, _, _) => n }
     val buildJobCounts = built.collect { case (n, _, _, j, _) if j > 0 => (n, j) }
     // ≥ 10 ms only: sub-centisecond construction is pure Scala-object
@@ -305,50 +230,53 @@ object Bench {
 
     // warm-up, untimed
     built.foreach { case (name, dfOpt, _, _, _) => dfOpt.foreach(exec(name, _)) }
-    val warmupCompiles = compileCount
+    val warmupCompiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     System.err.println(s"BENCH: build + warm-up compiled $warmupCompiles classes")
 
-    val bytes = new BytesListener
-    spark.sparkContext.addSparkListener(bytes)
-
+    // traceNs: time a pass spends in its queries' Trace windows outside
+    // their timed bodies (listener bookkeeping and bus drains), kept out
+    // of the pass's wall_s as it is kept out of each query's seconds
+    var traceNs = 0L
     // passEnv(pass label) = (loadStart, loadEnd, gcMs, wallS)
     val passEnv = scala.collection.mutable.ListBuffer
       .empty[(String, Double, Double, Long, Double)]
     def timedSweep(label: String)(
         body: => Seq[(String, Double, Boolean)])
         : Seq[(String, Double, Boolean)] = {
-      val (l0, g0, t0) = (loadAvg1, gcMs, System.nanoTime())
-      val out = body
-      passEnv += ((label, l0, loadAvg1, gcMs - g0,
-        (System.nanoTime() - t0) / 1e9))
+      val l0 = loadAvg1
+      val ((out, wallNs), c) = Trace.measure(spark) {
+        traceNs = 0L
+        val t0 = System.nanoTime()
+        val out = body
+        (out, System.nanoTime() - t0 - traceNs)
+      }
+      passEnv += ((label, l0, loadAvg1, c.gcMs, wallNs / 1e9))
       out
     }
 
-    // passes(pass) = per-query (name, seconds, ok); the byte listener
-    // attributes EVERY ordinary pass under a "p<pass>:<name>" job group
-    // (round 17 — previously only the LAST pass was attributed, so when
-    // the last pass was the one rev 5 discards, the artifact's
-    // shuffle bytes came from the very sweep the policy deems
-    // untrustworthy; the ADVICE r16 low). The reported map is read off
-    // the last NON-discarded pass after the discard decision below.
-    // compiles((pass, name)) = the query's Janino compilations in that
-    // pass, reported off the same pass as the shuffle bytes
-    val compiles = scala.collection.mutable.Map.empty[(Int, String), Long]
+    // passes(pass) = per-query (name, seconds, ok). Every ordinary pass
+    // runs each query in its own Trace window, so the reported maps can
+    // come from a pass the discard below keeps (ADVICE r16).
+    // attributed((pass, name)) = (shuffle-write bytes, compiles) of that
+    // run. Reruns are not measured.
+    val attributed = scala.collection.mutable.Map.empty[(Int, String), (Long, Long)]
     val passes: Seq[Seq[(String, Double, Boolean)]] =
       (1 to timedPasses).map { pass =>
         timedSweep(pass.toString) {
           built.map { case (name, dfOpt, eager, _, _) =>
-            spark.sparkContext.setJobGroup(s"p$pass:$name", name)
-            val c0 = compileCount
-            val t0 = System.nanoTime()
-            val ok = runOnce(name, dfOpt, eager)
-            val sec = (System.nanoTime() - t0) / 1e9
-            compiles((pass, name)) = compileCount - c0
-            (name, sec, ok)
+            val m0 = System.nanoTime()
+            val ((ok, ns), c) = Trace.measure(spark) {
+              val t0 = System.nanoTime()
+              val ok = runOnce(name, dfOpt, eager)
+              (ok, System.nanoTime() - t0)
+            }
+            traceNs += System.nanoTime() - m0 - ns
+            attributed((pass, name)) = (c.shuffleWriteBytes, c.compiles)
+            (name, ns / 1e9, ok)
           }
         }
       }
-    spark.sparkContext.clearJobGroup()
 
     // Rev-5 discard-worst-pass (see header): the pass with the largest
     // sweep wall is dropped WHOLE from the median samples — contention
@@ -361,11 +289,10 @@ object Bench {
       s"""{"pass":"${passEnv(worstPass)._1}","wall_s":${
         math.round(passEnv(worstPass)._5 * 100) / 100.0}}"""
     // shuffle bytes will be reported from the last pass that SURVIVED
-    // the discard — per-pass "p<pass>:" job groups make every pass's
-    // bytes available, so the attribution can never ride the
-    // contaminated sweep (shuffle bytes are plan-determined, but
-    // spill-induced variance would otherwise be read off a pass the
-    // policy distrusts); extraction happens after the bus drain below
+    // the discard — every pass's bytes are available, so the attribution
+    // can never ride the contaminated sweep (shuffle bytes are
+    // plan-determined, but spill-induced variance would otherwise be
+    // read off a pass the policy distrusts)
     val attribPass = (1 to timedPasses).filter(_ != worstPass + 1).max
 
     // Outlier policy (rev 4, see header): flag, rerun, report the clean
@@ -419,15 +346,9 @@ object Bench {
       ()
     }
 
-    // deliver every queued task event before reading the byte map
-    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
-    val shuffleByName: Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      val prefix = s"p$attribPass:"
-      bytes.shuffle.asScala.collect {
-        case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v
-      }.toMap
-    }
+    val shuffleByName: Map[String, Long] = built.map { case (name, _, _, _, _) =>
+      name -> attributed((attribPass, name))._1
+    }.toMap
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -472,7 +393,7 @@ object Bench {
     val buildJobsJson = buildJobCounts
       .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
     val compilesJson = ordered.map { case (k, _) =>
-      "\"" + k + "\":" + compiles.getOrElse((attribPass, k), 0L)
+      "\"" + k + "\":" + attributed((attribPass, k))._2
     }.mkString("{", ",", "}")
     val buildSecsJson = buildSecs
       .map { case (k, s) => "\"" + k + "\":" + s }.mkString("{", ",", "}")

@@ -35,40 +35,23 @@ object PipelineBench {
       "/tmp/graft_pipe_export")
     val spark = GraftSession.local()
 
-    // Per-stage attribution counters (round 15 — the d1000 pack/export
-    // runs varied 5-18× run-to-run under the 8 GiB heap with the route
-    // ruled out as the cause; gc/spill per stage makes the variance
+    // Per-stage attribution (round 15 — the d1000 pack/export runs
+    // varied 5-18× run-to-run under the 8 GiB heap with the route ruled
+    // out as the cause; gc/spill per stage makes the variance
     // attributable from the artifact instead of adjudicated after):
-    // task-summed GC time and memory/disk spill via listener, plus the
-    // driver JVM's own GC delta.
-    val taskGc = new java.util.concurrent.atomic.AtomicLong
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            taskGc.addAndGet(m.jvmGCTime)
-            spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-            ()
-          }
-        }
-      })
+    // each stage is one Trace window, and its task-summed GC time and
+    // memory/disk spill ride the stage row.
     val stages = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, Long, Long, Double)]
     def stage(name: String)(body: => DataFrame): DataFrame = {
-      org.apache.spark.sql.GraftSqlBridge
-        .drainListenerBus(spark.sparkContext)
-      val (gc0, sp0) = (taskGc.get(), spill.get())
-      val t0 = System.nanoTime()
-      val df = graft.operators.Artifacts.pin(body, s"pipe.$name")
-      val rows = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftSqlBridge
-        .drainListenerBus(spark.sparkContext)
-      val gcMs = taskGc.get() - gc0
-      val spillMb = (spill.get() - sp0) / 1e6
+      val ((df, rows, sec), c) = Trace.measure(spark) {
+        val t0 = System.nanoTime()
+        val df = graft.operators.Artifacts.pin(body, s"pipe.$name")
+        val rows = df.count()
+        (df, rows, (System.nanoTime() - t0) / 1e9)
+      }
+      val gcMs = c.taskGcMs
+      val spillMb = c.spillBytes / 1e6
       stages(name) = (sec, rows, gcMs, spillMb)
       System.err.println(f"PIPELINE $name%-14s ${sec}%8.2f s  $rows%10d rows" +
         f"  gc=${gcMs}%d ms  spill=${spillMb}%.0f MB")

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   *    per-key group sizes and join selectivities match a genuinely
   *    bigger corpus instead of tripling every group;
   *  - documents replicate with WORD-PERMUTED text (replica r sorts
-  *    tokens by md5(tok:pos:r), the DedupCrossoverBench trick): same
+  *    tokens by md5(tok:pos:r), the trick behind BASELINE.md's round-7
+  *    prefix-filter crossover table): same
   *    vocabulary and Zipf shape, but replicas are not exact/near dups of
   *    their originals, so dedup-family candidate structure grows the way
   *    a larger real corpus grows, not as planted duplicate clusters;
@@ -42,9 +43,10 @@ object ScaledFixture {
   /** Replica r's deterministic word permutation of `textCol`: tokens
     * sorted by md5(tok:pos:r) and re-joined — same vocabulary and Zipf
     * shape, different shingle sets, so replicas read as MORE corpus, not
-    * as planted duplicates. The ONE definition shared by ScaledFixture,
-    * DedupCrossoverBench and FuzzyCrossoverBench (a drifted copy would
-    * silently make their scale tables incomparable).
+    * as planted duplicates. The ONE definition behind ScaledFixture and
+    * BASELINE.md's round-7 prefix-filter crossover and round-8 fuzzy-dedup
+    * band-population tables (a drifted copy would silently make their
+    * scale tables incomparable).
     */
   def permuteText(textCol: org.apache.spark.sql.Column, r: Int):
       org.apache.spark.sql.Column = {

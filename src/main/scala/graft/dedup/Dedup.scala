@@ -216,7 +216,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * same convention and are likewise lossless (standard AllPairs/PPJoin
     * bounds).
     *
-    * CROSSOVER, measured (DedupCrossoverBench, best-of-2, local[32],
+    * CROSSOVER, measured (BASELINE.md "Round-7 measurement: exact-jaccard
+    * prefix-filter crossover", best-of-2, local[32],
     * threshold 0.8, word-permuted replicas of sf0.1 — df grows with
     * scale, true pairs stay sparse):
     *   1× (5k docs):    naive 1.63 s, prefix 1.62 s — parity in noise;

@@ -39,4 +39,14 @@ object GraftSqlBridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** Every listener on the context's bus and on the session's listener
+    * manager (both lists are package-private): what a spec compares to
+    * see that a measurement left no listener behind.
+    */
+  def listeners(spark: SparkSession): Seq[AnyRef] = {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.listenerBus.listeners.asScala.toSeq ++
+      spark.listenerManager.listListeners().toSeq
+  }
 }

@@ -172,21 +172,9 @@ object GraphMart {
     * under an hour; dirs superseded longer ago than that are garbage.
     * Supersession time is recorded by a [[SupersededMarker]] tombstone
     * dropped inside the dir on the first retire pass that sees it
-    * superseded; a malformed env override falls back to the default
-    * with a warning naming the variable (a bare `.toLong` here would
-    * surface as an opaque ExceptionInInitializerError on first touch).
+    * superseded.
     */
-  private[graft] val RetireGraceMs: Long = {
-    val env = "SPARK_GRAFT_MART_RETIRE_GRACE_MS"
-    val default = 60L * 60 * 1000
-    sys.env.get(env).map { v =>
-      scala.util.Try(v.toLong).getOrElse {
-        System.err.println(
-          s"GraphMart: $env='$v' is not a long; using default $default ms")
-        default
-      }
-    }.getOrElse(default)
-  }
+  private[graft] val RetireGraceMs: Long = 60L * 60 * 1000
 
   /** Tombstone file dropped inside a superseded counts dir; its mtime IS
     * the supersession time the grace window counts from. The leading

@@ -85,22 +85,8 @@ class PipelineSpec extends SparkSpecBase {
     val jobs = Seq(("j1", "u1"), ("j2", "u2")).toDF("job_id", "user_id")
     val ts = Seq(("m1", 1L)).toDF("machine_id", "ts")
     val gold = Seq(("2024-01-01", 1.0), ("2024-01-02", 2.0)).toDF("dt", "avg")
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { actions.incrementAndGet(); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      Checks.runAll(jobs, ts, gold)
-      // QueryExecutionListener delivery is async on the shared bus
-      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
-      assert(actions.get() == 3)
-    } finally spark.listenerManager.unregister(listener)
+    val (_, trace) = Trace.measure(spark)(Checks.runAll(jobs, ts, gold))
+    assert(trace.actions == 3)
   }
 
   test("merged per-table pass reports the same violations as the split checks") {

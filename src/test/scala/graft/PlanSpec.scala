@@ -776,61 +776,49 @@ class PlanSpec extends SparkSpecBase {
         (col("o_custkey") % 50).as("dst"))
       .filter(col("src") =!= col("dst"))
     edges.schema
-    // AtomicInteger + listener-bus drain (ADVICE r18): the listener
-    // fires on Spark's async dispatch thread, so a plain var read after
-    // a fixed sleep can race a slow bus and flakily read stale counts
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    def drained: Int = {
-      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
-      jobs.get()
-    }
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // each op's construction and plan render is one Trace window
+    val ((pr, pp), prTrace) = Trace.measure(spark) {
       val pr = graft.dedup.Components.pageRank(edges, iters = 3)
-      // THE structural property: the returned frame reads the LAST
-      // round's checkpoint — no join/aggregate lineage survives. The
-      // 111 s regression mode (lazy per-round chain) shows up here as
-      // the full co-order/contribution tree re-appearing in this plan.
-      val pp = plan(pr)
-      assert(pp.contains("Scan ExistingRDD"),
-        "pageRank output no longer reads a materialized round\n" + pp.take(600))
-      assert(!pp.contains("Join"), "pageRank rounds left a live join chain")
-      val build = drained
-      // generous ceiling (AQE runs stage jobs): catches runaway actions
-      assert(build <= 25 + 12 * 3,
-        s"pageRank(3 rounds) ran $build jobs — per-round overhead grew")
-      jobs.set(0)
+      (pr, plan(pr))
+    }
+    // THE structural property: the returned frame reads the LAST
+    // round's checkpoint — no join/aggregate lineage survives. The
+    // 111 s regression mode (lazy per-round chain) shows up here as
+    // the full co-order/contribution tree re-appearing in this plan.
+    assert(pp.contains("Scan ExistingRDD"),
+      "pageRank output no longer reads a materialized round\n" + pp.take(600))
+    assert(!pp.contains("Join"), "pageRank rounds left a live join chain")
+    val build = prTrace.jobs
+    // generous ceiling (AQE runs stage jobs): catches runaway actions
+    assert(build <= 25 + 12 * 3,
+      s"pageRank(3 rounds) ran $build jobs — per-round overhead grew")
+    val ((hh, hp), hitsTrace) = Trace.measure(spark) {
       val hh = graft.dedup.Components.hits(edges, iters = 3)
-      val hp = plan(hh)
-      assert(hp.contains("Scan ExistingRDD"),
-        "hits output no longer reads materialized half-steps")
-      assert("Join".r.findAllIn(hp).length <= 4,
-        "hits output grew a join chain beyond the a⋈h assembly")
-      // round 14: the L1 totals ride each half-step's one checkpoint
-      // job as broadcast 1-row frames (no per-round driver collects, no
-      // raw-frame checkpoints) — 2 checkpoints/round + AQE stage jobs.
-      // The old 6-job shape needed 20/round; regression to it trips this.
-      val hitsJobs = drained
-      assert(hitsJobs <= 25 + 12 * 3,
-        s"hits(3 rounds) ran $hitsJobs jobs — per-half-step overhead grew")
-      jobs.set(0)
+      (hh, plan(hh))
+    }
+    assert(hp.contains("Scan ExistingRDD"),
+      "hits output no longer reads materialized half-steps")
+    assert("Join".r.findAllIn(hp).length <= 4,
+      "hits output grew a join chain beyond the a⋈h assembly")
+    // round 14: the L1 totals ride each half-step's one checkpoint
+    // job as broadcast 1-row frames (no per-round driver collects, no
+    // raw-frame checkpoints) — 2 checkpoints/round + AQE stage jobs.
+    // The old 6-job shape needed 20/round; regression to it trips this.
+    val hitsJobs = hitsTrace.jobs
+    assert(hitsJobs <= 25 + 12 * 3,
+      s"hits(3 rounds) ran $hitsJobs jobs — per-half-step overhead grew")
+    val ((lp, lpp), lpaTrace) = Trace.measure(spark) {
       val lp = graft.dedup.Components.labelPropagation(edges, iters = 3)
-      val lpp = plan(lp)
-      assert(lpp.contains("Scan ExistingRDD"),
-        "labelPropagation output no longer reads a materialized round")
-      assert(!lpp.contains("Join"),
-        "labelPropagation rounds left a live join chain")
-      val lpaJobs = drained
-      assert(lpaJobs <= 25 + 12 * 3,
-        s"labelPropagation(3 rounds) ran $lpaJobs jobs — per-round overhead grew")
-      assert(pr.count() > 0 && hh.count() > 0 && lp.count() > 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      (lp, plan(lp))
+    }
+    assert(lpp.contains("Scan ExistingRDD"),
+      "labelPropagation output no longer reads a materialized round")
+    assert(!lpp.contains("Join"),
+      "labelPropagation rounds left a live join chain")
+    val lpaJobs = lpaTrace.jobs
+    assert(lpaJobs <= 25 + 12 * 3,
+      s"labelPropagation(3 rounds) ran $lpaJobs jobs — per-round overhead grew")
+    assert(pr.count() > 0 && hh.count() > 0 && lp.count() > 0)
   }
 
   test("kmv: sketch heaps are TopKPerKey (no Window); overlap join broadcasts") {
@@ -869,33 +857,16 @@ class PlanSpec extends SparkSpecBase {
     // must run Spark jobs every time (the cold self-join — never served
     // from the session mart memo), and the wedge plan must read the
     // materialized edges.
-    // AtomicInteger + listener-bus drain (ADVICE r18): the async
-    // dispatch thread can deliver job-start events after a fixed sleep
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    def drained: Int = {
-      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
-      jobs.get()
-    }
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val w = try {
-      val frame = q("q_graph_triangles")
-      assert(drained > 0,
-        "q_graph_triangles construction ran no jobs — the cold build " +
-          "witness is being served from a cache")
-      jobs.set(0)
-      val frame2 = q("q_graph_triangles")
-      assert(drained > 0,
-        "q_graph_triangles REPEAT construction ran no jobs — the cold " +
-          "build got memoized; the witness must pay the self-join per run")
-      frame2.schema // silence unused warning
-      plan(frame)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (frame, first) = Trace.measure(spark)(q("q_graph_triangles"))
+    assert(first.jobs > 0,
+      "q_graph_triangles construction ran no jobs — the cold build " +
+        "witness is being served from a cache")
+    val (frame2, repeat) = Trace.measure(spark)(q("q_graph_triangles"))
+    assert(repeat.jobs > 0,
+      "q_graph_triangles REPEAT construction ran no jobs — the cold " +
+        "build got memoized; the witness must pay the self-join per run")
+    frame2.schema // silence unused warning
+    val w = plan(frame)
     assert(w.contains("Scan ExistingRDD"),
       "q_graph_triangles wedge plan no longer reads the materialized " +
         "edge build\n" + w.take(600))
